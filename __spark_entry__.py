@@ -709,8 +709,8 @@ def q_triad_census(spark, sf_dir):
     v, e = _graph(spark, sf_dir)
     # thinned arc relation (same predicate in the oracle): the derived
     # lineitem graph is dense and the census wedge volume is
-    # output-bound quadratic — the gate probes correctness, bench.py
-    # carries the perf story
+    # output-bound quadratic — the gate probes correctness, not
+    # performance
     et = e.where((F.col("src") * 31 + F.col("dst")) % 7 == 0)
     return triad_census(spark, v, et).select(
         "triad", F.col("count").cast("long").alias("count")

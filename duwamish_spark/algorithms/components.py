@@ -18,24 +18,29 @@ Scale notes:
 - only vertices whose label changed last round send messages (the
   frontier) — the Pregel analog of vote-to-halt putting quiet vertices to
   sleep; message volume decays geometrically after the first rounds.
-- ``broadcast`` strategy (V ≤ broadcast_max_vertices): edges persisted
-  dst-partitioned, frontier broadcast per round, min-combine
-  partition-local — zero message shuffle. ``shuffle`` is the 10^12-scale
-  path.
+- ``strategy``/``salt``/``combine`` choose the run's message exchange
+  (pregel.MessageExchange, shared with PageRank and LP): on the broadcast
+  path the frontier is broadcast to dst-partitioned edges and the
+  min-combine is partition-local — zero message shuffle; ``shuffle`` is
+  the 10^12-scale path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.graph import decode_state, prepare_encoding, symmetrize
+from duwamish_spark.graph import (
+    decode_state,
+    partition_by,
+    prepare_encoding,
+    symmetrize,
+)
 from duwamish_spark.pregel import (
     local_checkpoint_stats_reset,
+    MessageExchange,
     Pregel,
     PregelResult,
-    combine_messages,
     free_local_checkpoint,
 )
 
@@ -53,27 +58,11 @@ def _cc_update(state: DataFrame, mins: DataFrame) -> DataFrame:
     )
 
 
-def _cc_step(
-    state: DataFrame, edges_sym: DataFrame, salt: int = 0, combine: str = "partial"
-) -> DataFrame:
+def _cc_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
     frontier = state.where(F.col("_changed") == 1)
-    msgs = frontier.hint("shuffle_hash").join(
-        edges_sym, frontier["id"] == edges_sym["src"]
-    ).select("dst", F.col("label").alias("m"))
-    mins = combine_messages(
-        msgs, [("mlabel", "m", "min"), ("mcnt", "m", "count")], key="dst", salt=salt,
-        pre_shuffle=(combine == "raw"),
-    ).withColumnRenamed("dst", "id")
-    return _cc_update(state, mins)
-
-
-def _cc_step_broadcast(state: DataFrame, edges_sym: DataFrame) -> DataFrame:
-    frontier = state.where(F.col("_changed") == 1).select("id", "label")
-    msgs = edges_sym.join(
-        F.broadcast(frontier), frontier["id"] == edges_sym["src"]
-    ).select("dst", F.col("label").alias("m"))
-    mins = msgs.groupBy("dst").agg(
-        F.min("m").alias("mlabel"), F.count("m").alias("mcnt")
+    msgs = exchange.send(frontier, F.col("label").alias("m"))
+    mins = exchange.combine(
+        msgs, [("mlabel", "m", "min"), ("mcnt", "m", "count")]
     ).withColumnRenamed("dst", "id")
     return _cc_update(state, mins)
 
@@ -273,7 +262,6 @@ def connected_components(
     halt_interval: int = 1,
     strategy: str = "auto",
     encode: bool = True,
-    broadcast_max_vertices: int = 5_000_000,
     resume: bool = False,
     algorithm: str = "hashmin",
     partitioner=None,
@@ -323,8 +311,7 @@ def connected_components(
             run_id=run_id, reliable_interval=reliable_interval,
             num_partitions=num_partitions, salt=salt,
             halt_interval=halt_interval, strategy=strategy, encode=encode,
-            broadcast_max_vertices=broadcast_max_vertices, resume=resume,
-            algorithm="hashmin", partitioner=partitioner, combine=combine,
+            resume=resume, algorithm="hashmin", partitioner=partitioner, combine=combine,
         )
         if probe.halted:
             return probe
@@ -341,21 +328,6 @@ def connected_components(
         mapping, verts, e = prepare_encoding(
             spark, vertices, edges, num_partitions, checkpoint_dir, run_id, resume
         )
-
-    n_verts = verts.count()
-    use_broadcast = strategy == "broadcast" or (
-        strategy == "auto" and n_verts <= broadcast_max_vertices
-    )
-
-    from duwamish_spark.graph import partition_by
-
-    edges_sym = symmetrize(e)
-    if num_partitions:
-        edges_sym = partition_by(
-            edges_sym, num_partitions, "dst" if use_broadcast else "src", partitioner
-        )
-    edges_sym = edges_sym.persist(StorageLevel.MEMORY_AND_DISK)
-    edges_sym.count()
 
     if initial_labels is not None:
         seed = initial_labels.select("id", F.col("label").alias("_seed"))
@@ -391,18 +363,14 @@ def connected_components(
         "message_count": F.sum("_msgs"),
         "component_min": F.min("label"),
     }
-    if use_broadcast:
-        # same quadratic-chaining hazard as pagerank's broadcast strategy:
-        # each lazy chained step re-executes the upstream chain in its
-        # broadcast build
-        halt_interval = min(halt_interval, 4)
-        step = lambda st, s: _cc_step_broadcast(st, edges_sym)  # noqa: E731
-    else:
-        step = lambda st, s: _cc_step(st, edges_sym, salt, combine)  # noqa: E731
-
+    exchange = MessageExchange(
+        symmetrize(e), verts.count(), strategy=strategy,
+        num_partitions=num_partitions, partitioner=partitioner, salt=salt,
+        combine=combine,
+    )
     runner = Pregel(
         spark,
-        step=step,
+        step=lambda st, s: _cc_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -410,11 +378,9 @@ def connected_components(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
+        exchange=exchange,
     )
-    try:
-        res = runner.run(init, resume=resume)
-        if mapping is not None:
-            res.state = decode_state(res.state, mapping, ("id", "label"))
-        return res
-    finally:
-        edges_sym.unpersist()
+    res = runner.run(init, resume=resume)
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id", "label"))
+    return res

@@ -19,8 +19,11 @@ Mode has no built-in partial aggregate, so it runs as the explicit
 two-stage form: ``groupBy(dst, label).count`` (algebraic — map-side partial
 combine applies) → per-dst argmax via ``min_by(label, struct(-count,
 label))``. Hub skew is absorbed by the first stage: each map task emits at
-most one row per (dst, label). With the ``broadcast`` strategy the first
-stage is partition-local on dst-partitioned edges — zero message shuffle.
+most one row per (dst, label). ``strategy``/``salt``/``combine`` choose the
+run's message exchange (pregel.MessageExchange, shared with PageRank and
+CC): on the broadcast path the labels are broadcast to dst-partitioned
+edges and the first stage is partition-local — zero message shuffle. The
+seeded and weighted variants always take the shuffle path.
 """
 
 from __future__ import annotations
@@ -29,27 +32,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.graph import decode_state, prepare_encoding, symmetrize
+from duwamish_spark.graph import (
+    decode_state,
+    prepare_encoding,
+    require_columns,
+    symmetrize,
+)
 from duwamish_spark.pregel import (
+    MessageExchange,
     Pregel,
     PregelResult,
-    combine_messages,
     local_checkpoint_stats_reset,
 )
 
 
-def _lp_combine_update(
-    state: DataFrame, msgs: DataFrame, salt: int = 0, combine: str = "partial"
-) -> DataFrame:
+def _lp_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
+    msgs = exchange.send(state, F.col("label").alias("m"))
     # stage 1 (count per (dst, label)) through the shared combiner so LP has
     # the same salt / raw-exchange knobs as CC and PageRank: salt splits a
     # hot (dst, label) key — a hub whose neighborhood converged to one
     # label — across reducer sub-keys; combine="raw" exchanges raw messages
     # by the composite key before aggregating (V/P-sized combine maps)
-    counts = combine_messages(
-        msgs, [("cnt", "m", "count")], key=["dst", "m"], salt=salt,
-        pre_shuffle=(combine == "raw"),
-    )
+    counts = exchange.combine(msgs, [("cnt", "m", "count")], key=["dst", "m"])
     mode = counts.groupBy("dst").agg(
         F.min_by("m", F.struct((-F.col("cnt")).alias("nc"), F.col("m"))).alias("mlabel"),
         F.sum("cnt").alias("mcnt"),
@@ -60,23 +64,6 @@ def _lp_combine_update(
         F.when(F.coalesce("mlabel", "label") != F.col("label"), 1).otherwise(0).alias("_changed"),
         F.coalesce("mcnt", F.lit(0)).alias("_msgs"),
     )
-
-
-def _lp_step(
-    state: DataFrame, edges_sym: DataFrame, salt: int = 0, combine: str = "partial"
-) -> DataFrame:
-    msgs = state.hint("shuffle_hash").join(
-        edges_sym, state["id"] == edges_sym["src"]
-    ).select("dst", F.col("label").alias("m"))
-    return _lp_combine_update(state, msgs, salt, combine)
-
-
-def _lp_step_broadcast(state: DataFrame, edges_sym: DataFrame) -> DataFrame:
-    labels = state.select("id", "label")
-    msgs = edges_sym.join(
-        F.broadcast(labels), labels["id"] == edges_sym["src"]
-    ).select("dst", F.col("label").alias("m"))
-    return _lp_combine_update(state, msgs)
 
 
 def label_propagation_delta(
@@ -270,7 +257,6 @@ def label_propagation(
     halt_interval: int = 1,
     strategy: str = "auto",
     encode: bool = True,
-    broadcast_max_vertices: int = 5_000_000,
     resume: bool = False,
     salt: int = 0,
     combine: str = "partial",
@@ -290,19 +276,6 @@ def label_propagation(
             spark, vertices, edges, num_partitions, checkpoint_dir, run_id, resume
         )
 
-    n_verts = verts.count()
-    use_broadcast = strategy == "broadcast" or (
-        strategy == "auto" and n_verts <= broadcast_max_vertices
-    )
-
-    edges_sym = symmetrize(e)
-    if num_partitions:
-        edges_sym = edges_sym.repartition(
-            num_partitions, "dst" if use_broadcast else "src"
-        )
-    edges_sym = edges_sym.persist(StorageLevel.MEMORY_AND_DISK)
-    edges_sym.count()
-
     init = verts.select("id", F.col("id").alias("label"))
     if num_partitions:
         init = init.repartition(num_partitions, "id")
@@ -313,16 +286,13 @@ def label_propagation(
         # exact DISTINCT is not allowed in observed metrics; HLL is fine here
         "distinct_labels": F.approx_count_distinct("label"),
     }
-    if use_broadcast:
-        # same quadratic-chaining hazard as pagerank's broadcast strategy
-        halt_interval = min(halt_interval, 4)
-        step = lambda st, s: _lp_step_broadcast(st, edges_sym)  # noqa: E731
-    else:
-        step = lambda st, s: _lp_step(st, edges_sym, salt, combine)  # noqa: E731
-
+    exchange = MessageExchange(
+        symmetrize(e), verts.count(), strategy=strategy,
+        num_partitions=num_partitions, salt=salt, combine=combine,
+    )
     runner = Pregel(
         spark,
-        step=step,
+        step=lambda st, s: _lp_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -330,22 +300,18 @@ def label_propagation(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
+        exchange=exchange,
     )
-    try:
-        res = runner.run(init, resume=resume)
-        if mapping is not None:
-            res.state = decode_state(res.state, mapping, ("id", "label"))
-        return res
-    finally:
-        edges_sym.unpersist()
+    res = runner.run(init, resume=resume)
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id", "label"))
+    return res
 
 
-def _lp_seeded_step(state: DataFrame, edges_sym: DataFrame) -> DataFrame:
+def _lp_seeded_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
     labeled = state.where(F.col("label").isNotNull()).select("id", "label")
-    msgs = labeled.hint("shuffle_hash").join(
-        edges_sym, labeled["id"] == edges_sym["src"]
-    ).select("dst", F.col("label").alias("m"))
-    counts = combine_messages(msgs, [("cnt", "m", "count")], key=["dst", "m"])
+    msgs = exchange.send(labeled, F.col("label").alias("m"))
+    counts = exchange.combine(msgs, [("cnt", "m", "count")], key=["dst", "m"])
     mode = counts.groupBy("dst").agg(
         F.min_by("m", F.struct((-F.col("cnt")).alias("nc"), F.col("m"))).alias("mlabel"),
         F.sum("cnt").alias("mcnt"),
@@ -407,11 +373,9 @@ def seeded_label_propagation(
     # deterministic collapse of duplicate seed rows: smallest label wins
     sd = seeds.groupBy("id").agg(F.min("label").alias("label"))
 
-    edges_sym = symmetrize(edges)
-    if num_partitions:
-        edges_sym = edges_sym.repartition(num_partitions, "src")
-    edges_sym = edges_sym.persist(StorageLevel.MEMORY_AND_DISK)
-    edges_sym.count()
+    exchange = MessageExchange(
+        symmetrize(edges), strategy="shuffle", num_partitions=num_partitions
+    )
 
     init = vertices.join(sd, "id", "left").select(
         "id",
@@ -428,7 +392,7 @@ def seeded_label_propagation(
     }
     runner = Pregel(
         spark,
-        step=lambda st, s: _lp_seeded_step(st, edges_sym),
+        step=lambda st, s: _lp_seeded_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -436,18 +400,14 @@ def seeded_label_propagation(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
+        exchange=exchange,
     )
-    try:
-        return runner.run(init, resume=resume)
-    finally:
-        edges_sym.unpersist()
+    return runner.run(init, resume=resume)
 
 
-def _lp_weighted_step(state: DataFrame, symw: DataFrame) -> DataFrame:
-    msgs = state.hint("shuffle_hash").join(
-        symw, state["id"] == symw["u"]
-    ).select(symw["v"].alias("dst"), F.col("label").alias("m"), "w")
-    counts = combine_messages(msgs, [("wsum", "w", "sum")], key=["dst", "m"])
+def _lp_weighted_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
+    msgs = exchange.send(state, F.col("label").alias("m"), "w")
+    counts = exchange.combine(msgs, [("wsum", "w", "sum")], key=["dst", "m"])
     mode = counts.groupBy("dst").agg(
         F.min_by(
             "m", F.struct((-F.col("wsum")).alias("nw"), F.col("m"))
@@ -496,6 +456,9 @@ def label_propagation_weighted(
     row per map task), per-dst argmax, V-row update join. The weighted
     und relation is built ONCE (E-bounded groupBy) and persisted.
     """
+    require_columns(
+        edges, ("src", "dst") + ((weight_col,) if weight_col is not None else ()), "edges"
+    )
     if weight_col is not None:
         wtype = edges.schema[weight_col].dataType.simpleString()
         if wtype not in ("bigint", "int", "smallint", "tinyint"):
@@ -516,12 +479,9 @@ def label_propagation_weighted(
     )
     undw = und.groupBy("lo", "hi").agg(F.sum("w").alias("w"))
     symw = undw.select(
-        F.col("lo").alias("u"), F.col("hi").alias("v"), "w"
-    ).unionAll(undw.select(F.col("hi").alias("u"), F.col("lo").alias("v"), "w"))
-    if num_partitions:
-        symw = symw.repartition(num_partitions, "u")
-    symw = symw.persist(StorageLevel.MEMORY_AND_DISK)
-    symw.count()
+        F.col("lo").alias("src"), F.col("hi").alias("dst"), "w"
+    ).unionAll(undw.select(F.col("hi").alias("src"), F.col("lo").alias("dst"), "w"))
+    exchange = MessageExchange(symw, strategy="shuffle", num_partitions=num_partitions)
 
     init = vertices.select("id", F.col("id").alias("label"))
     if num_partitions:
@@ -534,7 +494,7 @@ def label_propagation_weighted(
     }
     runner = Pregel(
         spark,
-        step=lambda st, s: _lp_weighted_step(st, symw),
+        step=lambda st, s: _lp_weighted_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -542,8 +502,6 @@ def label_propagation_weighted(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
+        exchange=exchange,
     )
-    try:
-        return runner.run(init, resume=resume)
-    finally:
-        symw.unpersist()
+    return runner.run(init, resume=resume)

@@ -86,8 +86,18 @@ _DEC = "decimal(19,0)"
 def weighted_undirected(edges: DataFrame, weight_col: str | None = None) -> DataFrame:
     """Undirected weighted simple edges (lo, hi, w), lo < hi: w = number
     of directed non-loop arcs between the pair in either direction (or
-    sum(weight_col) — integral weights required for exact scores)."""
-    require_columns(edges, ("src", "dst"), "edges")
+    sum(weight_col) — integral weights required for exact scores, and
+    enforced: a float weight would be truncated, 0.9 becoming 0)."""
+    require_columns(
+        edges, ("src", "dst") + ((weight_col,) if weight_col is not None else ()),
+        "edges",
+    )
+    if weight_col is not None:
+        wtype = edges.schema[weight_col].dataType.simpleString()
+        if wtype not in ("bigint", "int", "smallint", "tinyint"):
+            raise ValueError(
+                f"louvain requires an integer weight_col; {weight_col!r} is {wtype}"
+            )
     w = F.col(weight_col) if weight_col is not None else F.lit(1)
     return (
         edges.where(F.col("src") != F.col("dst"))

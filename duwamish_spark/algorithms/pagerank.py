@@ -16,21 +16,13 @@ Semantics pinned to the reference:
   north rule sets the threshold at 1e-6;
 - hard cap 200 supersteps (reference: PageRank.java:41,87,124).
 
-Physical strategies (measured on the 100k-vertex / 6.35M-edge bench graph,
-local[32]):
-
-- ``shuffle`` — the 10^12-scale path. ``edges_w`` persisted pre-partitioned
-  on ``src``; per superstep: state exchanges (V rows) to the edge
-  partitioning, SHUFFLE_HASH join generates messages, map-side partial
-  aggregation combines before the one E-bounded shuffle by ``dst``.
-- ``broadcast`` — when the vertex state fits a broadcast (V ≤
-  ``broadcast_max_vertices``): ``edges_w`` persisted pre-partitioned on
-  ``dst``; the rank vector is broadcast each superstep, so message combine
-  is PARTITION-LOCAL (partial+final hash aggregate in one codegen stage,
-  zero message shuffle). ~2x faster at bench scale (0.64s vs 1.25s per
-  superstep).
-- ``auto`` — pick broadcast iff V ≤ broadcast_max_vertices (mirrors
-  Spark's own broadcast-join selection).
+Physical strategy: ``strategy`` (auto/broadcast/shuffle), ``salt`` and
+``combine`` choose the run's message exchange, built once in
+pregel.MessageExchange and shared with CC and LP. The broadcast path
+(auto, up to 5M vertices) ships the rank vector to dst-partitioned edges
+and combines partition-locally — ~2x faster per superstep than the
+shuffle path at bench scale (0.64s vs 1.25s, 100k vertices / 6.35M edges,
+local[32]); the shuffle path is the 10^12-scale one.
 
 With ``encode=True`` (default), string vertex ids are dictionary-encoded to
 dense order-preserving longs once up front (graph.encode_vertices) and
@@ -41,40 +33,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from duwamish_spark.graph import decode_state, out_degrees, prepare_encoding
-from duwamish_spark.pregel import Pregel, PregelResult, combine_messages
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
 
 
 def _edges_weighted(
-    vertices: DataFrame,
-    edges: DataFrame,
-    num_partitions: int | None,
-    part_col: str = "src",
-    partitioner=None,
-    weight_col: str | None = None,
+    vertices: DataFrame, edges: DataFrame, weight_col: str | None = None
 ) -> DataFrame:
-    from duwamish_spark.graph import partition_by
-
     if weight_col is None:
         deg = out_degrees(vertices, edges)
-        ew = edges.join(
+        return edges.join(
             deg.withColumnRenamed("id", "src"), "src"
         ).select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("w"))
-    else:
-        # weighted graph: each out-edge carries weight/out-strength, the
-        # standard generalization of 1/out_degree (reduces to it when all
-        # weights are equal). Vertices whose out-strength is zero or
-        # negative would make the division meaningless — weights must be
-        # positive (ANSI mode turns a zero strength into a hard error).
-        strength = edges.groupBy("src").agg(F.sum(weight_col).alias("_s"))
-        ew = edges.join(strength, "src").select(
-            "src", "dst", (F.col(weight_col) / F.col("_s")).alias("w")
-        )
-    if num_partitions:
-        ew = partition_by(ew, num_partitions, part_col, partitioner)
-    return ew
+    # weighted graph: each out-edge carries weight/out-strength, the
+    # standard generalization of 1/out_degree (reduces to it when all
+    # weights are equal). Vertices whose out-strength is zero or
+    # negative would make the division meaningless — weights must be
+    # positive (ANSI mode turns a zero strength into a hard error).
+    strength = edges.groupBy("src").agg(F.sum(weight_col).alias("_s"))
+    return edges.join(strength, "src").select(
+        "src", "dst", (F.col(weight_col) / F.col("_s")).alias("w")
+    )
 
 
 def _update(state: DataFrame, sums: DataFrame, damping: float, extra=None) -> DataFrame:
@@ -121,42 +101,14 @@ def _dangling_share(state: DataFrame, n_verts: int) -> tuple[DataFrame, "F.Colum
 
 
 def pagerank_step(
-    state: DataFrame, edges_w: DataFrame, damping: float = 0.85, salt: int = 0,
-    combine: str = "partial", n_verts: int | None = None,
-) -> DataFrame:
-    """One shuffle-strategy superstep: state(id, rank) → (id, rank, _delta, _msgs).
-
-    ``shuffle_hash`` hints pin the physical strategy: the state side (V
-    rows) is the hash-build side, so the persisted edge table — already
-    hash-partitioned on ``src`` — is streamed with NO re-exchange, re-sort,
-    or per-superstep broadcast rebuild. The only E-row shuffle left is the
-    message combine itself (map-side partial aggregated; ``salt`` splits
-    hot destinations across reducer sub-keys).
-    """
-    msgs = state.hint("shuffle_hash").join(
-        edges_w, state["id"] == edges_w["src"]
-    ).select("dst", (F.col("rank") * F.col("w")).alias("m"))
-    sums = combine_messages(
-        msgs, [("msum", "m", "sum"), ("mcnt", "m", "count")], key="dst", salt=salt,
-        pre_shuffle=(combine == "raw"),
-    ).withColumnRenamed("dst", "id")
-    if "_dang" in state.columns:
-        state, share = _dangling_share(state, n_verts)
-        return _update(state, sums, damping, extra=share)
-    return _update(state, sums, damping)
-
-
-def pagerank_step_broadcast(
-    state: DataFrame, edges_w: DataFrame, damping: float = 0.85,
+    state: DataFrame, exchange: MessageExchange, damping: float = 0.85,
     n_verts: int | None = None,
 ) -> DataFrame:
-    """One broadcast-strategy superstep: edges are dst-partitioned, the rank
-    vector is broadcast, message combine is partition-local (no shuffle)."""
-    msgs = edges_w.join(F.broadcast(state), state["id"] == edges_w["src"]).select(
-        "dst", (F.col("rank") * F.col("w")).alias("m")
-    )
-    sums = msgs.groupBy("dst").agg(
-        F.sum("m").alias("msum"), F.count("m").alias("mcnt")
+    """One superstep: state(id, rank) → (id, rank, _delta, _msgs). Each
+    out-edge carries ``rank * w``; the exchange sums them per ``dst``."""
+    msgs = exchange.send(state, (F.col("rank") * F.col("w")).alias("m"))
+    sums = exchange.combine(
+        msgs, [("msum", "m", "sum"), ("mcnt", "m", "count")]
     ).withColumnRenamed("dst", "id")
     if "_dang" in state.columns:
         state, share = _dangling_share(state, n_verts)
@@ -181,7 +133,6 @@ def pagerank(
     strategy: str = "auto",
     combine: str = "partial",
     encode: bool = True,
-    broadcast_max_vertices: int = 5_000_000,
     resume: bool = False,
     initial_ranks: DataFrame | None = None,
     teleport: DataFrame | None = None,
@@ -246,28 +197,6 @@ def pagerank(
         )
 
     n_verts = verts.count()
-    use_broadcast = strategy == "broadcast" or (
-        strategy == "auto" and n_verts <= broadcast_max_vertices
-    )
-
-    if salt == "auto":
-        if use_broadcast:
-            # broadcast combine is partition-local — salt is never used,
-            # so skip the full-edge-table degree probe + driver collect
-            salt = 0
-        else:
-            from duwamish_spark.graph import suggest_salt
-
-            p = num_partitions or int(
-                spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            salt = suggest_salt(e, p)
-
-    edges_w = _edges_weighted(
-        verts, e, num_partitions, "dst" if use_broadcast else "src", partitioner,
-        weight_col,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    edges_w.count()  # materialize once; reused every superstep
 
     if initial_ranks is not None:
         seed = initial_ranks.select("id", F.col("rank").alias("_seed"))
@@ -314,19 +243,14 @@ def pagerank(
         "message_count": F.sum("_msgs"),
     }
 
-    if use_broadcast:
-        # chained (lazy) supersteps re-execute the upstream chain inside
-        # each broadcast build, so recompute grows quadratically with the
-        # chain depth; measured sweet spot is 4 (18.7M e/s vs 8.0M at 8 on
-        # the SF=0.1 bench graph) — cap rather than let it degrade
-        halt_interval = min(halt_interval, 4)
-        step = lambda st, s: pagerank_step_broadcast(st, edges_w, damping, n_verts)  # noqa: E731
-    else:
-        step = lambda st, s: pagerank_step(st, edges_w, damping, salt, combine, n_verts)  # noqa: E731
-
+    exchange = MessageExchange(
+        _edges_weighted(verts, e, weight_col), n_verts, strategy=strategy,
+        num_partitions=num_partitions, partitioner=partitioner, salt=salt,
+        combine=combine,
+    )
     runner = Pregel(
         spark,
-        step=step,
+        step=lambda st, s: pagerank_step(st, exchange, damping, n_verts),
         metrics_exprs=metrics,
         halt=lambda m, s: m["residual"] < tol,
         checkpoint_dir=checkpoint_dir,
@@ -334,11 +258,9 @@ def pagerank(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
+        exchange=exchange,
     )
-    try:
-        res = runner.run(init, resume=resume)
-        if mapping is not None:
-            res.state = decode_state(res.state, mapping, ("id",))
-        return res
-    finally:
-        edges_w.unpersist()
+    res = runner.run(init, resume=resume)
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id",))
+    return res

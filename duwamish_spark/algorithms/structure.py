@@ -434,6 +434,7 @@ def modularity_weighted(
     instead. One E-bounded pair groupBy, two label joins, two linear
     aggregates.
     """
+    require_columns(edges, ("src", "dst", weight_col), "edges")
     require_columns(labels, ("id", "label"), "labels")
     wtype = edges.schema[weight_col].dataType.simpleString()
     if wtype not in ("bigint", "int", "smallint", "tinyint"):

@@ -189,7 +189,7 @@ def decode_media(
 
     ``kernel``: ``"vectorized"`` (default, above) or ``"perrow"`` — the
     per-row NumPy loop kept as the measured A/B reference
-    (``media_ab.py``); identical output (tested).
+    (BENCH/media_ab.json); identical output (tested).
     """
     if require_real_codecs and codec is None:
         if not _HAVE_PIL:

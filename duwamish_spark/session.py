@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """3/8 of this machine's physical memory as a Spark size (48g on a
+    128 GiB host). Local-mode executors share the driver JVM, so the heap
+    has to feed every task slot; 3/8 leaves room for off-heap buffers,
+    Python workers and the OS. -Xmx is a cap, not a commit."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys * 3 // 8 >> 20}m"
+
+
 def get_spark(
     app_name: str = "duwamish_spark",
     master: str | None = None,
@@ -21,11 +30,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster you would set this to ~2-3x total executor cores instead.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    machine's core count). ``shuffle_partitions`` defaults to the local
+    core count — on a real cluster you would set this to ~2-3x total
+    executor cores instead. The driver heap is ``$SPARK_DRIVER_MEM`` (env,
+    default :func:`default_driver_memory`).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -51,11 +62,10 @@ def get_spark(
         # bench harness's final JSON line when its tail was captured
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local-mode executors share the driver JVM: at local[32] the old
-        # 16g default was 0.5g per task slot, which OOMs wide-relation
-        # joins at SF>=1 (a cluster would give each core 2-8g). 48g on
-        # the 128GiB sandbox = 1.5g/slot; -Xmx is a cap, not a commit.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():

@@ -13,9 +13,10 @@ TWO_TRIANGLES = [
 ]
 
 
-def _run(spark, ids, edges, rounds=10):
+def _run(spark, ids, edges, rounds=10, **kw):
     res = label_propagation(
-        spark, vertices_df(spark, ids), edges_df(spark, edges), max_supersteps=rounds
+        spark, vertices_df(spark, ids), edges_df(spark, edges), max_supersteps=rounds,
+        **kw,
     )
     return {r["id"]: r["label"] for r in res.state.collect()}, res
 
@@ -35,11 +36,12 @@ def test_mode_min_tiebreak(spark):
     assert got["z"] == "a"
 
 
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
 @pytest.mark.parametrize("v,maxdeg,seed,rounds", [(200, 4, 8, 5), (300, 8, 9, 10)])
-def test_random_vs_oracle_exact(spark, v, maxdeg, seed, rounds):
+def test_random_vs_oracle_exact(spark, v, maxdeg, seed, rounds, strategy):
     ids, edges = rand_graph(v, maxdeg, seed)
     want = lp_oracle(ids, edges, rounds=rounds)
-    got, _ = _run(spark, ids, edges, rounds=rounds)
+    got, _ = _run(spark, ids, edges, rounds=rounds, strategy=strategy)
     assert got == want
 
 
@@ -303,6 +305,17 @@ def test_weighted_lp_rejects_float_weights(spark):
         [("a", "b", 0.9)], "src string, dst string, weight double"
     )
     with _pytest.raises(ValueError, match="integer weight_col"):
+        label_propagation_weighted(
+            spark, vertices_df(spark, ["a", "b"]), e, weight_col="weight",
+            max_supersteps=1,
+        )
+
+
+def test_weighted_lp_missing_weight_column(spark):
+    from duwamish_spark.algorithms import label_propagation_weighted
+
+    e = edges_df(spark, [("a", "b")])
+    with pytest.raises(ValueError, match="missing column"):
         label_propagation_weighted(
             spark, vertices_df(spark, ["a", "b"]), e, weight_col="weight",
             max_supersteps=1,

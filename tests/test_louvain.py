@@ -208,3 +208,10 @@ def test_weight_col_respected(spark):
     res = louvain(spark, None, e, weight_col="w", max_rounds=12)
     got = {r.id: r.comm for r in res.state.collect()}
     assert got[1] == got[2]
+
+
+def test_float_weights_rejected(spark):
+    # a cast to long would silently turn 0.9 into a zero-weight edge
+    e = spark.createDataFrame([(1, 2, 0.9)], "src long, dst long, w double")
+    with pytest.raises(ValueError, match="integer weight_col"):
+        weighted_undirected(e, "w")

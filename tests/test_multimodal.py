@@ -122,7 +122,7 @@ def test_embed_media_feeds_ann(media, spark):
 
 
 def test_perrow_kernel_equals_vectorized(media, spark):
-    # the per-row loop is the A/B reference for media_ab.py -- byte-for-byte
+    # the per-row loop is the A/B reference (BENCH/media_ab.json) -- byte-for-byte
     # identical output to the vectorized prefix-sum kernel, including a
     # malformed (non-DWMM / short) payload row
     from pyspark.sql import functions as F

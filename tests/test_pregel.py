@@ -32,6 +32,9 @@ def test_halt_interval_equivalence(spark, graph):
     ra = {r["id"]: r["rank"] for r in a.state.collect()}
     rb = {r["id"]: r["rank"] for r in b.state.collect()}
     assert a.supersteps == b.supersteps == 10
+    # the broadcast path caps chaining at 4: boundaries at 3, 7, then the
+    # final superstep
+    assert [m["superstep"] for m in b.metrics] == [3, 7, 9]
     for k in ra:
         assert rb[k] == pytest.approx(ra[k], abs=1e-12)
     # convergence with halt_interval still halts below tolerance

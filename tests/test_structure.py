@@ -311,6 +311,15 @@ def test_weighted_modularity_rejects_float_weights(spark):
         modularity_weighted(e, ldf, "weight")
 
 
+def test_weighted_modularity_missing_weight_column(spark):
+    from duwamish_spark.algorithms import modularity_weighted
+
+    e = spark.createDataFrame([(1, 2)], "src long, dst long")
+    ldf = spark.createDataFrame([(1, 0), (2, 0)], "id long, label long")
+    with pytest.raises(ValueError, match="missing column"):
+        modularity_weighted(e, ldf, "weight")
+
+
 # ---------------------------------------------------------------------------
 # co-citation / bibliographic coupling (directed)
 # ---------------------------------------------------------------------------

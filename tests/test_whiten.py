@@ -92,8 +92,8 @@ def test_empty_table_raises(spark):
 def test_whitening_recovers_planted_twins(spark):
     """The regime whitening exists for: planted neighbor pairs obscured
     by shared anisotropic (rogue-dimension) noise — raw cosine misses
-    them, whitened cosine recovers them (measured end-to-end through the
-    LSH pipeline in bench.py; brute-force miniature here)."""
+    them, whitened cosine recovers them (the LSH pipeline at scale runs
+    the same regime; brute-force miniature here)."""
     from duwamish_spark.functions.similarity import knn_cosine
 
     rng = np.random.default_rng(7)
