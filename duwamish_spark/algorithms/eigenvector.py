@@ -22,34 +22,50 @@ Semantics (deterministic, fixed evaluation order):
   No normalization — bounded iff ``alpha < 1/λ_max``; the truncated
   series Σ_k alpha^k (Aᵀ)^k β at the halt step, exact and replayable.
 
-Physical plan (the one you'd want at 10^12 edges): the edge table is
-persisted once, pre-partitioned on ``src``; every iteration is exactly
-ONE E-bounded exchange (the dst-keyed message combine) — the state side
-streams through a SHUFFLE_HASH join against the persisted edges without
-re-exchanging them, and the L2 norm / halt delta ride the materializing
-state job as an Observation (the reference's accumulator reduce,
+Physical plan: a :class:`~duwamish_spark.pregel.Pregel` program with one
+message exchange (pregel.MessageExchange, pinned to the ``shuffle``
+strategy) over the edges, persisted once and partitioned on ``src``
+when ``num_partitions`` is set. One superstep is exactly ONE E-bounded
+shuffle (the dst-keyed message combine); the V-sized state streams
+through a SHUFFLE_HASH join against the persisted edges. Eigenvector's
+L2 norm is a broadcast 1-row agg over the combined sums that reads the
+combine shuffle as a reused exchange; Katz needs no norm. The norm and
+the halt delta ride the state as ``_`` columns and become the
+superstep's metrics row (the reference's accumulator reduce,
 util/Accumulators.java, kept distributed). This is half of hits.py's
-per-iteration cost: one direction instead of two.
+per-superstep cost: one direction instead of two.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.graph import (
-    decode_state,
-    partition_by,
-    prepare_encoding,
-    require_columns,
-)
-from duwamish_spark.pregel import (
-    PregelResult,
-    combine_messages,
-    free_local_checkpoint,
-    local_checkpoint_stats_reset,
-)
+from duwamish_spark.algorithms.hits import _l2, _normalized, _sums
+from duwamish_spark.graph import decode_state, prepare_encoding, require_columns
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
+
+
+def _eigen_step(
+    state: DataFrame, x: MessageExchange, katz: tuple[float, float] | None
+) -> DataFrame:
+    """Eigenvector (``katz`` None) or Katz (``katz`` = (alpha, beta))."""
+    state = state.select("id", "value")  # last superstep's `_` columns go
+    raw = _sums(x, state, F.col("value"), "raw")
+    joined = state.join(raw, "id", "left")
+    if katz is None:
+        joined = joined.crossJoin(F.broadcast(_l2(raw, "raw", "_n")))
+        new, extra = _normalized("raw", "_n"), ["_n"]
+    else:
+        alpha, beta = katz
+        raw_e = F.coalesce(F.col("raw"), F.lit(0.0))
+        new, extra = F.lit(float(beta)) + F.lit(float(alpha)) * raw_e, []
+    return joined.select(
+        "id",
+        new.alias("value"),
+        F.abs(new - state["value"]).alias("_delta"),
+        *extra,
+    )
 
 
 def _power_iteration(
@@ -57,9 +73,7 @@ def _power_iteration(
     vertices: DataFrame,
     edges: DataFrame,
     *,
-    update,  # (raw_col, norm_col) -> Column: new value expression
-    init: float,
-    needs_norm: bool,
+    katz: tuple[float, float] | None,
     tol: float,
     max_iters: int,
     num_partitions: int | None,
@@ -68,7 +82,7 @@ def _power_iteration(
     partitioner,
     run_id: str,
 ) -> PregelResult:
-    """Shared one-direction power-iteration driver (see module doc)."""
+    """Shared one-direction power-iteration program (see module doc)."""
     require_columns(vertices, ("id",), "vertices")
     require_columns(edges, ("src", "dst"), "edges")
 
@@ -79,88 +93,26 @@ def _power_iteration(
             spark, vertices, edges, num_partitions
         )
 
-    e = e.select("src", "dst")
-    if num_partitions:
-        e = partition_by(e, num_partitions, "src", partitioner)
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-
-    state = local_checkpoint_stats_reset(
-        verts.select("id", F.lit(float(init)).alias("value"))
+    x = MessageExchange(
+        e.select("src", "dst"), strategy="shuffle",
+        num_partitions=num_partitions, partitioner=partitioner, salt=salt,
     )
-    metrics_hist: list[dict] = []
-    halted = False
-    iters = 0
-    try:
-        for i in range(1, max_iters + 1):
-            msgs = state.hint("shuffle_hash").join(
-                e, state["id"] == e["src"]
-            ).select("dst", F.col("value").alias("m"))
-            raw = local_checkpoint_stats_reset(
-                combine_messages(
-                    msgs, [("raw", "m", "sum")], key="dst", salt=salt
-                ).withColumnRenamed("dst", "id")
-            )
-
-            if needs_norm:
-                norm = raw.agg(
-                    F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("_n")
-                )
-            else:
-                norm = spark.range(1).select(F.lit(1.0).alias("_n"))
-            new_e = update(
-                F.coalesce(F.col("raw"), F.lit(0.0)), F.col("_n")
-            )
-            prev = state
-            obs = Observation()
-            new_state = (
-                prev.join(raw, "id", "left")
-                .crossJoin(F.broadcast(norm))
-                .select(
-                    "id",
-                    new_e.alias("value"),
-                    F.abs(new_e - prev["value"]).alias("_delta"),
-                    F.col("_n"),
-                )
-                # metrics ride the materializing job (pregel.py pattern);
-                # project transient columns away BEFORE the checkpoint so
-                # the kept state is a bare freeable LogicalRDD
-                .observe(
-                    obs,
-                    F.sum("_delta").alias("d"),
-                    F.first("_n").alias("n"),
-                )
-                .select("id", "value")
-            )
-            new_state = local_checkpoint_stats_reset(new_state)
-            mrow = dict(obs.get)
-            delta = float(mrow["d"] or 0.0)
-            state = new_state
-            for tmp in (prev, raw):
-                free_local_checkpoint(tmp)
-            iters = i
-            metrics_hist.append(
-                {
-                    "superstep": i,
-                    "delta": delta,
-                    "norm": float(mrow["n"] or 0.0),
-                }
-            )
-            if delta < tol:
-                halted = True
-                break
-
-        if mapping is not None:
-            state = decode_state(state, mapping, ("id",))
-        return PregelResult(
-            state=state,
-            supersteps=iters,
-            metrics=metrics_hist,
-            halted=halted,
-            run_id=run_id,
-        )
-    finally:
-        e.unpersist()
+    metrics = {"delta": F.sum("_delta")}
+    if katz is None:
+        metrics["norm"] = F.max("_n")
+    init = 1.0 if katz is None else float(katz[1])
+    res = Pregel(
+        spark,
+        step=lambda st, s: _eigen_step(st, x, katz),
+        metrics_exprs=metrics,
+        halt=lambda m, s: (m["delta"] or 0.0) < tol,
+        run_id=run_id,
+        max_supersteps=max_iters,
+        exchanges=(x,),
+    ).run(verts.select("id", F.lit(init).alias("value")))
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id",))
+    return res
 
 
 def eigenvector_centrality(
@@ -180,15 +132,11 @@ def eigenvector_centrality(
     Result state: (id, value) — the L2-normalized in-edge power-iteration
     vector at the halt step. ``salt`` splits hot aggregation keys across
     reducer sub-keys in the message combine (same knob and economics as
-    pagerank/CC — see pregel.combine_messages).
+    pagerank/CC — see pregel.MessageExchange).
     """
-
-    def upd(raw, n):
-        return F.when(n > 0.0, raw / n).otherwise(F.lit(0.0))
-
     return _power_iteration(
         spark, vertices, edges,
-        update=upd, init=1.0, needs_norm=True,
+        katz=None,
         tol=tol, max_iters=max_iters, num_partitions=num_partitions,
         salt=salt, encode=encode, partitioner=partitioner,
         run_id="eigenvector",
@@ -214,13 +162,9 @@ def katz_centrality(
     Result state: (id, value) — the truncated attenuated-path series at
     the halt step (exact when halted; bounded iff ``alpha < 1/λ_max``).
     """
-
-    def upd(raw, _n):
-        return F.lit(float(beta)) + F.lit(float(alpha)) * raw
-
     return _power_iteration(
         spark, vertices, edges,
-        update=upd, init=float(beta), needs_norm=False,
+        katz=(alpha, beta),
         tol=tol, max_iters=max_iters, num_partitions=num_partitions,
         salt=salt, encode=encode, partitioner=partitioner,
         run_id="katz",

@@ -25,34 +25,81 @@ Semantics (standard, deterministic):
 - halt when the L1 change ``Σ|auth_i − auth_{i-1}| + Σ|hub_i − hub_{i-1}|``
   drops below ``tol``, or after ``max_iters``.
 
-Physical plan (the one you'd want at 10^12 edges): the edge table is
-persisted TWICE, pre-partitioned on ``src`` and on ``dst`` — each
-iteration runs exactly two E-bounded message shuffles (auth combine by
-``dst``, hub combine by ``src``), with the persisted edge side streamed
-un-exchanged through a SHUFFLE_HASH join against the V-sized state
-(exactly pagerank.py's shuffle-strategy economics, doubled because HITS
-is a two-direction algorithm). Norms and the halt delta are 1-row aggs
-over V-sized checkpointed frames — the only driver-side collects.
+Physical plan: a :class:`~duwamish_spark.pregel.Pregel` program with two
+message exchanges (pregel.MessageExchange, pinned to the ``shuffle``
+strategy): a forward one on the edges ``(src, dst)`` and a backward one
+on the reversed edges, each persisted once, partitioned on its sending
+side. One superstep runs exactly two E-bounded message shuffles (the
+auth combine by ``dst``, the hub combine by the original ``src``); the
+persisted edge side streams un-exchanged through a SHUFFLE_HASH join
+against the V-sized senders. The L2 norms are broadcast 1-row aggs over
+the combined sums, so each combine shuffle runs once and its other uses
+read it back as a reused exchange. The norms and the halt delta ride the
+state as ``_`` columns and become the superstep's metrics row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.graph import (
-    decode_state,
-    partition_by,
-    prepare_encoding,
-    require_columns,
-)
-from duwamish_spark.pregel import (
-    PregelResult,
-    combine_messages,
-    free_local_checkpoint,
-    local_checkpoint_stats_reset,
-)
+from duwamish_spark.graph import decode_state, prepare_encoding, require_columns
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
+
+
+def _l2(df: DataFrame, col: str, alias: str) -> DataFrame:
+    """1-row ``(alias)``: the L2 norm of ``col`` (0 when ``df`` is empty)."""
+    return df.agg(
+        F.coalesce(F.sqrt(F.sum(F.col(col) * F.col(col))), F.lit(0.0)).alias(alias)
+    )
+
+
+def _sums(
+    x: MessageExchange, senders: DataFrame, value: Column, out: str
+) -> DataFrame:
+    """``(id, out)``: Σ ``value`` over each vertex's incoming messages.
+
+    The explicit not-null ``dst`` filter is the one the later joins on
+    ``id`` would infer; stating it up front gives every use of the sums
+    (joins and norm) the same plan below the combine, so the combine
+    shuffle runs once and the other uses read it as a reused exchange.
+    """
+    msgs = x.send(senders, value.alias("m")).where(F.col("dst").isNotNull())
+    return x.combine(msgs, [(out, "m", "sum")]).withColumnRenamed("dst", "id")
+
+
+def _normalized(raw: str, norm: str):
+    return F.when(
+        F.col(norm) > 0.0, F.coalesce(raw, F.lit(0.0)) / F.col(norm)
+    ).otherwise(F.lit(0.0))
+
+
+def _hits_step(
+    state: DataFrame, fwd: MessageExchange, bwd: MessageExchange
+) -> DataFrame:
+    state = state.select("id", "auth", "hub")  # last superstep's `_` columns go
+    # auth half-step: sum hubs over in-edges
+    araw = _sums(fwd, state, F.col("hub"), "araw")
+    # hub half-step: sum raw auths over out-edges (reversed-edge send)
+    hraw = _sums(bwd, araw, F.col("araw"), "hraw")
+    auth = _normalized("araw", "_an")
+    hub = _normalized("hraw", "_hn")
+    return (
+        state.join(araw, "id", "left")
+        .join(hraw, "id", "left")
+        .crossJoin(F.broadcast(_l2(araw, "araw", "_an")))
+        .crossJoin(F.broadcast(_l2(hraw, "hraw", "_hn")))
+        .select(
+            "id",
+            auth.alias("auth"),
+            hub.alias("hub"),
+            (F.abs(auth - state["auth"]) + F.abs(hub - state["hub"])).alias(
+                "_delta"
+            ),
+            "_an",
+            "_hn",
+        )
+    )
 
 
 def hits(
@@ -71,7 +118,7 @@ def hits(
 
     ``salt`` splits hot aggregation keys across reducer sub-keys in both
     message combines (same knob and economics as pagerank/CC — see
-    pregel.combine_messages).
+    pregel.MessageExchange).
     """
     require_columns(vertices, ("id",), "vertices")
     require_columns(edges, ("src", "dst"), "edges")
@@ -83,112 +130,27 @@ def hits(
             spark, vertices, edges, num_partitions
         )
 
-    e = e.select("src", "dst")
-    e_src, e_dst = e, e
-    if num_partitions:
-        e_src = partition_by(e, num_partitions, "src", partitioner)
-        e_dst = partition_by(e, num_partitions, "dst", partitioner)
-    e_src = e_src.persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst = e_dst.persist(StorageLevel.MEMORY_AND_DISK)
-    e_src.count()
-    e_dst.count()
-
-    state = verts.select(
-        "id", F.lit(0.0).alias("auth"), F.lit(1.0).alias("hub")
-    ).transform(local_checkpoint_stats_reset)
-    metrics_hist: list[dict] = []
-    halted = False
-    iters = 0
-    try:
-        for i in range(1, max_iters + 1):
-            # auth half-step: sum hubs over in-edges (E-shuffle by dst)
-            amsgs = state.hint("shuffle_hash").join(
-                e_src, state["id"] == e_src["src"]
-            ).select("dst", F.col("hub").alias("m"))
-            araw = combine_messages(
-                amsgs, [("araw", "m", "sum")], key="dst", salt=salt
-            ).withColumnRenamed("dst", "id").transform(local_checkpoint_stats_reset)
-
-            # hub half-step: sum raw auths over out-edges (E-shuffle by src)
-            hmsgs = araw.hint("shuffle_hash").join(
-                e_dst, araw["id"] == e_dst["dst"]
-            ).select("src", F.col("araw").alias("m"))
-            hraw = combine_messages(
-                hmsgs, [("hraw", "m", "sum")], key="src", salt=salt
-            ).withColumnRenamed("src", "id").transform(local_checkpoint_stats_reset)
-
-            # L2 norms as broadcast 1-row aggs INSIDE the state job — no
-            # driver round-trip per half-step (the reference's accumulator
-            # reduce, kept distributed)
-            anorm = araw.agg(
-                F.sqrt(F.sum(F.col("araw") * F.col("araw"))).alias("_an")
-            )
-            hnorm = hraw.agg(
-                F.sqrt(F.sum(F.col("hraw") * F.col("hraw"))).alias("_hn")
-            )
-            auth_e = F.when(
-                F.col("_an") > 0.0, F.coalesce("araw", F.lit(0.0)) / F.col("_an")
-            ).otherwise(F.lit(0.0))
-            hub_e = F.when(
-                F.col("_hn") > 0.0, F.coalesce("hraw", F.lit(0.0)) / F.col("_hn")
-            ).otherwise(F.lit(0.0))
-            prev = state
-            obs = Observation()
-            new_state = (
-                prev.join(araw, "id", "left")
-                .join(hraw, "id", "left")
-                .crossJoin(F.broadcast(anorm))
-                .crossJoin(F.broadcast(hnorm))
-                .select(
-                    "id",
-                    auth_e.alias("auth"),
-                    hub_e.alias("hub"),
-                    (
-                        F.abs(auth_e - prev["auth"])
-                        + F.abs(hub_e - prev["hub"])
-                    ).alias("_delta"),
-                    F.col("_an"),
-                    F.col("_hn"),
-                )
-                # metrics ride the materializing job (pregel.py pattern) —
-                # no separate aggregation job per iteration; projecting the
-                # transient columns away BEFORE the checkpoint keeps the
-                # state a bare (freeable) LogicalRDD with 3 columns
-                .observe(
-                    obs,
-                    F.sum("_delta").alias("d"),
-                    F.first("_an").alias("an"),
-                    F.first("_hn").alias("hn"),
-                )
-                .select("id", "auth", "hub")
-                .transform(local_checkpoint_stats_reset)
-            )
-            mrow = dict(obs.get)
-            delta = float(mrow["d"] or 0.0)
-            an, hn = float(mrow["an"] or 0.0), float(mrow["hn"] or 0.0)
-            # keep the BARE checkpointed frame as state (a .drop() wrapper
-            # would make next iteration's free_local_checkpoint(prev) a
-            # silent no-op and leak every superstep's blocks)
-            state = new_state
-            for tmp in (prev, araw, hraw):
-                free_local_checkpoint(tmp)
-            iters = i
-            metrics_hist.append(
-                {"superstep": i, "delta": delta, "auth_norm": an, "hub_norm": hn}
-            )
-            if delta < tol:
-                halted = True
-                break
-
-        if mapping is not None:
-            state = decode_state(state, mapping, ("id",))
-        return PregelResult(
-            state=state,
-            supersteps=iters,
-            metrics=metrics_hist,
-            halted=halted,
-            run_id="hits",
-        )
-    finally:
-        e_src.unpersist()
-        e_dst.unpersist()
+    opts = dict(
+        strategy="shuffle", num_partitions=num_partitions,
+        partitioner=partitioner, salt=salt,
+    )
+    fwd = MessageExchange(e.select("src", "dst"), **opts)
+    bwd = MessageExchange(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), **opts
+    )
+    res = Pregel(
+        spark,
+        step=lambda st, s: _hits_step(st, fwd, bwd),
+        metrics_exprs={
+            "delta": F.sum("_delta"),
+            "auth_norm": F.max("_an"),
+            "hub_norm": F.max("_hn"),
+        },
+        halt=lambda m, s: (m["delta"] or 0.0) < tol,
+        run_id="hits",
+        max_supersteps=max_iters,
+        exchanges=(fwd, bwd),
+    ).run(verts.select("id", F.lit(0.0).alias("auth"), F.lit(1.0).alias("hub")))
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id",))
+    return res

@@ -300,7 +300,7 @@ def label_propagation(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-        exchange=exchange,
+        exchanges=(exchange,),
     )
     res = runner.run(init, resume=resume)
     if mapping is not None:
@@ -400,7 +400,7 @@ def seeded_label_propagation(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-        exchange=exchange,
+        exchanges=(exchange,),
     )
     return runner.run(init, resume=resume)
 
@@ -502,6 +502,6 @@ def label_propagation_weighted(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-        exchange=exchange,
+        exchanges=(exchange,),
     )
     return runner.run(init, resume=resume)

@@ -26,27 +26,26 @@ vertex with ``depth == max_supersteps`` when ``halted`` is False is
 cycle-reachable — the complement of a valid layering certificate).
 The bounded recurrence is what the driver oracle replays as chained
 CTEs.
+
+Physical plan: SSSP's — one :class:`~duwamish_spark.pregel.MessageExchange`
+pinned to the ``shuffle`` strategy over the persisted distinct arcs and
+one E-bounded max/count combine by ``dst`` per superstep.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.pregel import Pregel, PregelResult
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
 
 
-def _depth_step(state: DataFrame, edges: DataFrame) -> DataFrame:
+def _depth_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
     frontier = state.where(F.col("_changed") == 1)
-    msgs = frontier.hint("shuffle_hash").join(
-        edges, frontier["id"] == edges["src"]
-    ).select("dst", (F.col("depth") + F.lit(1)).alias("m"))
-    best = (
-        msgs.groupBy("dst")
-        .agg(F.max("m").alias("best"), F.count(F.lit(1)).alias("mcnt"))
-        .withColumnRenamed("dst", "id")
-    )
+    msgs = exchange.send(frontier, (F.col("depth") + F.lit(1)).alias("m"))
+    best = exchange.combine(
+        msgs, [("best", "m", "max"), ("mcnt", "m", "count")]
+    ).withColumnRenamed("dst", "id")
     improved = F.col("best").isNotNull() & (F.col("best") > F.col("depth"))
     return state.join(best.hint("shuffle_hash"), "id", "left").select(
         "id",
@@ -85,10 +84,9 @@ def topological_depth(
         .select("src", "dst")
         .distinct()
     )
-    if num_partitions:
-        arcs = arcs.repartition(num_partitions, "src")
-    arcs = arcs.persist(StorageLevel.MEMORY_AND_DISK)
-    arcs.count()
+    exchange = MessageExchange(
+        arcs, strategy="shuffle", num_partitions=num_partitions
+    )
 
     init = vertices.select(
         "id",
@@ -104,9 +102,9 @@ def topological_depth(
         "message_count": F.sum("_msgs"),
         "max_depth": F.max("depth"),
     }
-    runner = Pregel(
+    return Pregel(
         spark,
-        step=lambda st, s: _depth_step(st, arcs),
+        step=lambda st, s: _depth_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -114,8 +112,5 @@ def topological_depth(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-    )
-    try:
-        return runner.run(init, resume=resume)
-    finally:
-        arcs.unpersist()
+        exchanges=(exchange,),
+    ).run(init, resume=resume)

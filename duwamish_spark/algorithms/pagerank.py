@@ -258,7 +258,7 @@ def pagerank(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-        exchange=exchange,
+        exchanges=(exchange,),
     )
     res = runner.run(init, resume=resume)
     if mapping is not None:

@@ -30,35 +30,51 @@ Semantics (deterministic, fixed evaluation order):
   authority vector is ∝ indegree (Lempel & Moran Prop. 2); on general
   graphs per-component — the tests pin both.
 
-Physical plan (the one you'd want at 10^12 edges): the edge table is
-persisted twice with the degree weights PRE-FOLDED — ``(src, dst, wf)``
-partitioned on ``src`` and ``(src, dst, wb)`` partitioned on ``dst`` —
-so every iteration is exactly two E-bounded exchanges (the auth combine
-by dst, the hub combine by src); the V-sized state streams through
-SHUFFLE_HASH joins against the persisted edge sides without
-re-exchanging them, and the halt delta / mass totals ride the
-materializing state job as an Observation. Identical per-iteration
-economics to hits.py; the degree joins run once at init.
+Physical plan: a :class:`~duwamish_spark.pregel.Pregel` program with the
+same two message exchanges as hits.py (pregel.MessageExchange, pinned to
+the ``shuffle`` strategy), whose persisted edge tables carry the degree
+weights PRE-FOLDED — ``(src, dst, wf)`` forward and the reversed
+``(src:=dst, dst:=src, wb)`` backward, each partitioned on its sending
+side — so one superstep is exactly two E-bounded shuffles (the auth
+combine by dst, the hub combine by the original src); the V-sized state
+streams through SHUFFLE_HASH joins against the persisted edge sides.
+The halt delta and the mass totals are the superstep's metrics row.
+Identical per-superstep economics to hits.py; the degree joins run once
+at init.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.graph import (
-    decode_state,
-    partition_by,
-    prepare_encoding,
-    require_columns,
-)
-from duwamish_spark.pregel import (
-    PregelResult,
-    combine_messages,
-    free_local_checkpoint,
-    local_checkpoint_stats_reset,
-)
+from duwamish_spark.algorithms.hits import _sums
+from duwamish_spark.graph import decode_state, prepare_encoding, require_columns
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
+
+
+def _salsa_step(
+    state: DataFrame, fwd: MessageExchange, bwd: MessageExchange
+) -> DataFrame:
+    state = state.select("id", "auth", "hub")  # last superstep's `_` columns go
+    # auth half-step: forward walk hub→authority
+    araw = _sums(fwd, state, F.col("hub") * F.col("wf"), "araw")
+    # hub half-step: backward walk authority→hub (reversed-edge send)
+    hraw = _sums(bwd, araw, F.col("araw") * F.col("wb"), "hraw")
+    auth = F.coalesce("araw", F.lit(0.0))
+    hub = F.coalesce("hraw", F.lit(0.0))
+    return (
+        state.join(araw, "id", "left")
+        .join(hraw, "id", "left")
+        .select(
+            "id",
+            auth.alias("auth"),
+            hub.alias("hub"),
+            (F.abs(auth - state["auth"]) + F.abs(hub - state["hub"])).alias(
+                "_delta"
+            ),
+        )
+    )
 
 
 def salsa(
@@ -79,7 +95,7 @@ def salsa(
     (each sums to 1); vertices with no in-edges hold ``auth = 0``, no
     out-edges ``hub = 0``. ``salt`` splits hot aggregation keys across
     reducer sub-keys in both message combines (same knob and economics
-    as pagerank/CC — see pregel.combine_messages).
+    as pagerank/CC — see pregel.MessageExchange).
     """
     require_columns(vertices, ("id",), "vertices")
     require_columns(edges, ("src", "dst"), "edges")
@@ -95,112 +111,51 @@ def salsa(
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("idg"))
     # degree weights folded into the persisted edge tables ONCE — the
-    # per-iteration plan then matches unweighted HITS exactly (the same
+    # per-superstep plan then matches unweighted HITS exactly (the same
     # trick as pagerank's weight_col: normalize at init, not per step)
-    e_fwd = e.join(outdeg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("od")).alias("wf")
+    opts = dict(
+        strategy="shuffle", num_partitions=num_partitions,
+        partitioner=partitioner, salt=salt,
     )
-    e_bwd = e.join(indeg, "dst").select(
-        "src", "dst", (F.lit(1.0) / F.col("idg")).alias("wb")
+    fwd = MessageExchange(
+        e.join(outdeg, "src").select(
+            "src", "dst", (F.lit(1.0) / F.col("od")).alias("wf")
+        ),
+        **opts,
     )
-    if num_partitions:
-        e_fwd = partition_by(e_fwd, num_partitions, "src", partitioner)
-        e_bwd = partition_by(e_bwd, num_partitions, "dst", partitioner)
-    e_fwd = e_fwd.persist(StorageLevel.MEMORY_AND_DISK)
-    e_bwd = e_bwd.persist(StorageLevel.MEMORY_AND_DISK)
-    e_fwd.count()
-    e_bwd.count()
+    bwd = MessageExchange(
+        e.join(indeg, "dst").select(
+            F.col("dst").alias("src"),
+            F.col("src").alias("dst"),
+            (F.lit(1.0) / F.col("idg")).alias("wb"),
+        ),
+        **opts,
+    )
 
     n_hubs = outdeg.count()
     hubs = outdeg.select(F.col("src").alias("id"), F.lit(1).alias("_h"))
-    state = (
-        verts.join(hubs, "id", "left")
-        .select(
-            "id",
-            F.lit(0.0).alias("auth"),
-            F.when(F.col("_h").isNotNull(), F.lit(1.0 / max(n_hubs, 1)))
-            .otherwise(F.lit(0.0))
-            .alias("hub"),
-        )
-        .transform(local_checkpoint_stats_reset)
+    init = verts.join(hubs, "id", "left").select(
+        "id",
+        F.lit(0.0).alias("auth"),
+        F.when(F.col("_h").isNotNull(), F.lit(1.0 / max(n_hubs, 1)))
+        .otherwise(F.lit(0.0))
+        .alias("hub"),
     )
-
-    metrics_hist: list[dict] = []
-    halted = False
-    iters = 0
-    try:
-        for i in range(1, max_iters + 1):
-            # auth half-step: forward walk hub→authority (E-shuffle by dst)
-            amsgs = state.hint("shuffle_hash").join(
-                e_fwd, state["id"] == e_fwd["src"]
-            ).select("dst", (F.col("hub") * F.col("wf")).alias("m"))
-            araw = combine_messages(
-                amsgs, [("araw", "m", "sum")], key="dst", salt=salt
-            ).withColumnRenamed("dst", "id").transform(local_checkpoint_stats_reset)
-
-            # hub half-step: backward walk authority→hub (E-shuffle by src)
-            hmsgs = araw.hint("shuffle_hash").join(
-                e_bwd, araw["id"] == e_bwd["dst"]
-            ).select("src", (F.col("araw") * F.col("wb")).alias("m"))
-            hraw = combine_messages(
-                hmsgs, [("hraw", "m", "sum")], key="src", salt=salt
-            ).withColumnRenamed("src", "id").transform(local_checkpoint_stats_reset)
-
-            auth_e = F.coalesce("araw", F.lit(0.0))
-            hub_e = F.coalesce("hraw", F.lit(0.0))
-            prev = state
-            obs = Observation()
-            new_state = (
-                prev.join(araw, "id", "left")
-                .join(hraw, "id", "left")
-                .select(
-                    "id",
-                    auth_e.alias("auth"),
-                    hub_e.alias("hub"),
-                    (
-                        F.abs(auth_e - prev["auth"])
-                        + F.abs(hub_e - prev["hub"])
-                    ).alias("_delta"),
-                )
-                # metrics ride the materializing job (pregel.py pattern);
-                # the mass totals double as a conservation check — both
-                # must stay 1.0 up to fp rounding every iteration
-                .observe(
-                    obs,
-                    F.sum("_delta").alias("d"),
-                    F.sum("auth").alias("am"),
-                    F.sum("hub").alias("hm"),
-                )
-                .select("id", "auth", "hub")
-                .transform(local_checkpoint_stats_reset)
-            )
-            mrow = dict(obs.get)
-            delta = float(mrow["d"] or 0.0)
-            state = new_state
-            for tmp in (prev, araw, hraw):
-                free_local_checkpoint(tmp)
-            iters = i
-            metrics_hist.append(
-                {
-                    "superstep": i,
-                    "delta": delta,
-                    "auth_mass": float(mrow["am"] or 0.0),
-                    "hub_mass": float(mrow["hm"] or 0.0),
-                }
-            )
-            if delta < tol:
-                halted = True
-                break
-
-        if mapping is not None:
-            state = decode_state(state, mapping, ("id",))
-        return PregelResult(
-            state=state,
-            supersteps=iters,
-            metrics=metrics_hist,
-            halted=halted,
-            run_id="salsa",
-        )
-    finally:
-        e_fwd.unpersist()
-        e_bwd.unpersist()
+    res = Pregel(
+        spark,
+        step=lambda st, s: _salsa_step(st, fwd, bwd),
+        # the mass totals double as a conservation check — both must stay
+        # 1.0 up to fp rounding every superstep
+        metrics_exprs={
+            "delta": F.sum("_delta"),
+            "auth_mass": F.sum("auth"),
+            "hub_mass": F.sum("hub"),
+        },
+        halt=lambda m, s: (m["delta"] or 0.0) < tol,
+        run_id="salsa",
+        max_supersteps=max_iters,
+        exchanges=(fwd, bwd),
+    ).run(init)
+    if mapping is not None:
+        res.state = decode_state(res.state, mapping, ("id",))
+    return res

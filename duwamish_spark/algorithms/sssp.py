@@ -16,28 +16,33 @@ Semantics:
   smallest distance, then lexicographically smallest predecessor;
 - halt when no vertex improved — the default decider's "all voted ∧ no
   messages" (reference: util/DefaultHaltDecider.java:25-29).
+
+Physical plan: one :class:`~duwamish_spark.pregel.MessageExchange`
+pinned to the ``shuffle`` strategy — the weighted edges persisted once
+(partitioned on ``src`` when ``num_partitions`` is set), the frontier
+joined to them SHUFFLE_HASH, and one E-bounded min/count combine by
+``dst`` per superstep.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.pregel import Pregel, PregelResult
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
 
 
-def _sssp_step(state: DataFrame, edges: DataFrame) -> DataFrame:
+def _sssp_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
     frontier = state.where(F.col("_changed") == 1)
-    msgs = frontier.hint("shuffle_hash").join(edges, frontier["id"] == edges["src"]).select(
-        "dst",
+    msgs = exchange.send(
+        frontier,
         F.struct(
             (F.col("dist") + F.col("weight")).alias("dist"),
             F.col("id").alias("pred"),
         ).alias("m"),
     )
-    best = msgs.groupBy("dst").agg(
-        F.min("m").alias("best"), F.count(F.lit(1)).alias("mcnt")
+    best = exchange.combine(
+        msgs, [("best", "m", "min"), ("mcnt", "m", "count")]
     ).withColumnRenamed("dst", "id")
     improved = F.col("best").isNotNull() & (
         F.col("dist").isNull() | (F.col("best.dist") < F.col("dist"))
@@ -74,11 +79,10 @@ def shortest_paths(
 
     require_columns(vertices, ("id",), "vertices")
     require_columns(weighted_edges, ("src", "dst", "weight"), "weighted_edges")
-    edges = weighted_edges.select("src", "dst", "weight")
-    if num_partitions:
-        edges = edges.repartition(num_partitions, "src")
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    exchange = MessageExchange(
+        weighted_edges.select("src", "dst", "weight"), strategy="shuffle",
+        num_partitions=num_partitions,
+    )
 
     init = vertices.select(
         "id",
@@ -96,9 +100,9 @@ def shortest_paths(
         "reached": F.count("dist"),
         "max_dist": F.max("dist"),
     }
-    runner = Pregel(
+    return Pregel(
         spark,
-        step=lambda st, s: _sssp_step(st, edges),
+        step=lambda st, s: _sssp_step(st, exchange),
         metrics_exprs=metrics,
         halt=lambda m, s: (m["changed"] or 0) == 0,
         checkpoint_dir=checkpoint_dir,
@@ -106,8 +110,5 @@ def shortest_paths(
         reliable_interval=reliable_interval,
         max_supersteps=max_supersteps,
         halt_interval=halt_interval,
-    )
-    try:
-        return runner.run(init, resume=resume)
-    finally:
-        edges.unpersist()
+        exchanges=(exchange,),
+    ).run(init, resume=resume)

@@ -62,11 +62,16 @@ def free_local_checkpoint(df: DataFrame) -> None:
     (a fresh conversion RDD, not the holder) touches the blocks — they
     belong to the internal RDD inside the plan's ``LogicalRDD`` node, so
     without this they linger until the ContextCleaner happens to GC the
-    reference (verified empirically via getRDDStorageInfo). Best-effort:
-    silently a no-op if the plan isn't a bare LogicalRDD.
+    reference (verified empirically via getRDDStorageInfo). Column
+    projections over the checkpoint (``Pregel.run``'s result drops the
+    ``_`` columns) hold the same blocks and are looked through.
+    Best-effort: silently a no-op if the plan isn't a LogicalRDD under
+    projections.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getName().endswith(".Project"):
+            plan = plan.child()
         if plan.getClass().getName().endswith("LogicalRDD"):
             plan.rdd().unpersist(False)
     except Exception:
@@ -219,6 +224,8 @@ class MessageExchange:
 
     The edge table must carry ``src`` and ``dst``; it is placed, persisted
     and counted here, and released by :class:`Pregel` when its run ends.
+    A program that sends both ways along its edges (HITS, SALSA) builds a
+    second exchange over the reversed edges (``src``:=dst, ``dst``:=src).
     """
 
     def __init__(
@@ -323,12 +330,18 @@ class Pregel:
         stages of that job), amortizing per-job driver overhead — the Spark
         analog of the reference running its thread-pool barrier without
         returning to the user between rounds. Convergence may overshoot by
-        up to k-1 supersteps (still below tolerance at halt). Durable
-        checkpoints land on halt boundaries. Capped at
-        BROADCAST_CHAIN_CAP when ``exchange`` broadcasts.
-    exchange:
-        the run's :class:`MessageExchange`, if ``step`` sends through one;
-        its edge table is unpersisted when ``run`` returns.
+        up to k-1 supersteps (still below tolerance at halt). Capped at
+        BROADCAST_CHAIN_CAP when any of ``exchanges`` broadcasts. Durable
+        checkpoints land on halt boundaries: ``reliable_interval`` is
+        rounded up to the first multiple of ``halt_interval`` at or above
+        it.
+    exchanges:
+        the run's :class:`MessageExchange` objects that ``step`` sends
+        through; their edge tables are unpersisted when ``run`` returns.
+
+    Local checkpoints are freed as soon as the next superstep's state has
+    materialized; only the result's own checkpoint remains, and
+    ``free_local_checkpoint(result.state)`` releases it.
     """
 
     def __init__(
@@ -343,7 +356,7 @@ class Pregel:
         reliable_interval: int = 10,
         max_supersteps: int = 200,
         halt_interval: int = 1,
-        exchange: MessageExchange | None = None,
+        exchanges: tuple[MessageExchange, ...] = (),
     ) -> None:
         self.spark = spark
         self.step = step
@@ -351,12 +364,13 @@ class Pregel:
         self.halt = halt
         self.checkpoint_dir = checkpoint_dir
         self.run_id = run_id
-        self.exchange = exchange
-        if exchange is not None and exchange.broadcast:
+        self.exchanges = tuple(exchanges)
+        if any(x.broadcast for x in self.exchanges):
             halt_interval = min(halt_interval, BROADCAST_CHAIN_CAP)
         self.halt_interval = max(1, halt_interval)
         # durable checkpoints must land on halt/materialization boundaries
-        self.reliable_interval = max(self.halt_interval, reliable_interval)
+        k = self.halt_interval
+        self.reliable_interval = -(-max(1, reliable_interval) // k) * k
         self.max_supersteps = max_supersteps
 
     # -- checkpoint layout -------------------------------------------------
@@ -411,7 +425,7 @@ class Pregel:
         conf = self.spark.conf
         saved_aqe = conf.get("spark.sql.adaptive.enabled")
 
-        cached: list[DataFrame] = []
+        held: DataFrame | None = None  # the live local checkpoint
         halted = False
         try:
             if resume and self.checkpoint_dir:
@@ -472,8 +486,12 @@ class Pregel:
                         F.count(F.lit(1)).alias("vertex_count"),
                         *[c.alias(n) for n, c in self.metrics_exprs.items()],
                     ).transform(local_checkpoint_stats_reset)
-                    cached.append(new_state)
                     agg_row = dict(obs.get)
+                # the new state has materialized: no plan reads the
+                # superseded checkpoint any more
+                if held is not None:
+                    free_local_checkpoint(held)
+                held = None if durable else new_state
 
                 wall_ms = (time.monotonic() - t0) * 1000.0
                 t0 = time.monotonic()
@@ -505,18 +523,18 @@ class Pregel:
                     with open(self._manifest_path(s), "w") as f:
                         json.dump(manifest, f, default=str)
 
-                # free local checkpoints older than 2 supersteps
-                while len(cached) > 2:
-                    free_local_checkpoint(cached.pop(0))
-
                 state = new_state
                 if halted:
                     break
+        except BaseException:
+            if held is not None:
+                free_local_checkpoint(held)
+            raise
         finally:
             if saved_aqe is not None:
                 conf.set("spark.sql.adaptive.enabled", saved_aqe)
-            if self.exchange is not None:
-                self.exchange.edges.unpersist()
+            for x in self.exchanges:
+                x.edges.unpersist()
 
         # drop transient metric columns
         final = state.select(*[c for c in state.columns if not c.startswith("_")])

@@ -17,7 +17,8 @@ Flags:
   * any other kind mismatch (string vs numeric, etc.)
 
 Usage: python scripts/typeaudit.py [--only name1,name2]
-Exit code 1 if any flag fires.
+Exit code 1 if any flag fires. The same check (``wire_flags``) runs on
+every oracled query in tests/test_entry_contract.py.
 """
 
 from __future__ import annotations
@@ -87,17 +88,44 @@ def _duck_kind(dt: str) -> str:
     return dt.lower()
 
 
-def audit(only: set[str] | None = None, spark=None) -> int:
+def wire_flags(s_types: dict[str, str], d_types: dict[str, str]) -> list[tuple[str, str]]:
+    """``(column, message)`` for every column whose pandas wire kind
+    differs between the Spark schema ``s_types`` and the DuckDB DESCRIBE
+    types ``d_types`` (both ``{column: type string}``)."""
+    if set(s_types) != set(d_types):
+        return [
+            ("*",
+             f"column sets differ: spark-only={sorted(set(s_types) - set(d_types))} "
+             f"oracle-only={sorted(set(d_types) - set(s_types))}")
+        ]
+    flags = []
+    for col in sorted(s_types):
+        sk, dk = _spark_kind(s_types[col]), _duck_kind(d_types[col])
+        if sk == "decimal" or dk == "decimal":
+            flags.append(
+                (col,
+                 f"DECIMAL on the wire ({s_types[col]} vs {d_types[col]}) — "
+                 "Spark Decimal obj vs DuckDB float64")
+            )
+        elif dk == "hugeint":
+            flags.append(
+                (col, f"oracle HUGEINT vs spark {s_types[col]} — pandas float64 vs int64")
+            )
+        elif sk != dk:
+            flags.append((col, f"kind mismatch: {s_types[col]} vs {d_types[col]}"))
+    return flags
+
+
+def audit(only: set[str] | None = None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    if spark is None:
-        from duwamish_spark.session import get_spark
+    from duwamish_spark.session import get_spark
 
-        spark = get_spark()
+    spark = get_spark()
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -119,28 +147,7 @@ def audit(only: set[str] | None = None, spark=None) -> int:
             flags.append((name, "*", f"duckdb describe failed: {exc!r:.200}"))
             continue
         checked += 1
-        if set(s_types) != set(d_types):
-            flags.append(
-                (name, "*",
-                 f"column sets differ: spark-only={sorted(set(s_types) - set(d_types))} "
-                 f"oracle-only={sorted(set(d_types) - set(s_types))}")
-            )
-            continue
-        for col in sorted(s_types):
-            sk, dk = _spark_kind(s_types[col]), _duck_kind(d_types[col])
-            if sk == "decimal" or dk == "decimal":
-                flags.append(
-                    (name, col,
-                     f"DECIMAL on the wire ({s_types[col]} vs {d_types[col]}) — "
-                     "Spark Decimal obj vs DuckDB float64")
-                )
-            elif dk == "hugeint":
-                flags.append(
-                    (name, col,
-                     f"oracle HUGEINT vs spark {s_types[col]} — pandas float64 vs int64")
-                )
-            elif sk != dk:
-                flags.append((name, col, f"kind mismatch: {s_types[col]} vs {d_types[col]}"))
+        flags += [(name, col, msg) for col, msg in wire_flags(s_types, d_types)]
 
     print(f"typeaudit: {checked} queries described, {len(flags)} flags")
     for name, col, msg in flags:

@@ -1,6 +1,12 @@
 """Mirror of the driver's correctness gate: run each __spark_entry__ query
 on Spark and its oracle SQL on DuckDB over the same parquet, compare
 row-count + schema-shape + sorted values exactly.
+
+The value comparison is deliberately type-INsensitive, but the driver's
+value-hash is type-sensitive through pandas (Spark DECIMAL surfaces as
+Decimal objects, DuckDB DECIMAL/HUGEINT as float64, on identical
+values), so each query's Spark schema must also map to the same pandas
+wire kind as DuckDB's DESCRIBE of its oracle (scripts/typeaudit.py).
 """
 
 from __future__ import annotations
@@ -15,6 +21,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from scripts.typeaudit import wire_flags
 
 # derived from the entry module so the test and the oracles can never run
 # against different SF dirs (honors SPARK_GRAFT_ORACLE_SF_DIR)
@@ -62,7 +69,8 @@ def test_query_matches_oracle(spark, ducks, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
-    res = ducks.execute(entrymod.oracle_sql()[name])
+    sql = entrymod.oracle_sql()[name]
+    res = ducks.execute(sql)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
 
@@ -71,6 +79,25 @@ def test_query_matches_oracle(spark, ducks, name):
     a, b = _norm(srows, scols), _norm(drows, dcols)
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, f"{name}: {len(mismatches)} mismatching rows, first: {mismatches[:3]}"
+
+    s_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+    d_types = {r[0]: r[1] for r in ducks.execute(f"DESCRIBE {sql}").fetchall()}
+    flags = wire_flags(s_types, d_types)
+    assert not flags, f"{name}: wire kinds differ: {flags}"
+
+
+def test_wire_flags_catch_type_drift():
+    # Spark-free: the kind classifier behind the wire-type check above
+    assert wire_flags({"a": "bigint", "b": "double", "c": "string"},
+                      {"a": "BIGINT", "b": "DOUBLE", "c": "VARCHAR"}) == []
+    flagged = dict(wire_flags(
+        {"dec": "decimal(38,0)", "huge": "bigint", "i2f": "bigint", "f2i": "double"},
+        {"dec": "DOUBLE", "huge": "HUGEINT", "i2f": "DOUBLE", "f2i": "INTEGER"},
+    ))
+    assert set(flagged) == {"dec", "huge", "i2f", "f2i"}
+    assert "DECIMAL" in flagged["dec"] and "HUGEINT" in flagged["huge"]
+    assert dict(wire_flags({"d": "double"}, {"d": "DECIMAL(18,3)"}))["d"].startswith("DECIMAL")
+    assert wire_flags({"a": "int"}, {"b": "INTEGER"})[0][0] == "*"
 
 
 def test_every_query_is_oracled():

@@ -12,9 +12,16 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import edges_df, vertices_df
-from duwamish_spark.algorithms import pagerank
+from duwamish_spark.algorithms import (
+    connected_components,
+    pagerank,
+    shortest_paths,
+    topological_depth,
+)
+from duwamish_spark.pregel import free_local_checkpoint
 from oracle import rand_graph
 
 
@@ -77,6 +84,56 @@ def test_checkpoint_layout_and_metrics_log(spark, graph, tmp_path):
     assert [r["superstep"] for r in lines] == [0, 1, 2, 3]
     assert all("residual" in r and "wall_ms" in r and r["vertex_count"] == 120 for r in lines)
     assert len(res.metrics) == 4
+
+
+def test_durable_cadence_rounds_up_to_halt_boundary(spark, graph, tmp_path):
+    # halt boundaries every 3 supersteps, durable every 10 requested: the
+    # durable checkpoints land on the first boundary at or past each 10
+    # (12, 24) plus the final superstep — not only where 3 and 10 meet
+    v, e = graph
+    ck = str(tmp_path / "ck")
+    pagerank(spark, v, e, tol=0.0, strategy="shuffle", halt_interval=3,
+             reliable_interval=10, max_supersteps=25,
+             checkpoint_dir=ck, run_id="r5")
+    root = os.path.join(ck, "r5")
+    written = sorted(p for p in os.listdir(root) if p.startswith("superstep="))
+    assert written == ["superstep=00011", "superstep=00023", "superstep=00024"]
+
+
+def _storage_ids(spark):
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+_PROGRAMS = {
+    "pagerank-broadcast": lambda spark, v, e: pagerank(
+        spark, v, e, tol=0.0, max_supersteps=4, strategy="broadcast",
+        encode=False,
+    ),
+    "pagerank-shuffle": lambda spark, v, e: pagerank(
+        spark, v, e, tol=0.0, max_supersteps=4, strategy="shuffle",
+        encode=False,
+    ),
+    "cc": lambda spark, v, e: connected_components(
+        spark, v, e, max_supersteps=4, encode=False
+    ),
+    "sssp": lambda spark, v, e: shortest_paths(
+        spark, v, e.withColumn("weight", F.lit(1.0)), "0", max_supersteps=4
+    ),
+    "topo": lambda spark, v, e: topological_depth(spark, v, e, max_supersteps=4),
+}
+
+
+@pytest.mark.parametrize("program", sorted(_PROGRAMS))
+def test_run_releases_storage(spark, graph, program):
+    """A finished run holds only its result's local checkpoint, and
+    free_local_checkpoint(result.state) releases that one too."""
+    v, e = graph
+    before = _storage_ids(spark)
+    res = _PROGRAMS[program](spark, v, e)
+    res.state.count()
+    free_local_checkpoint(res.state)
+    leaked = _storage_ids(spark) - before
+    assert not leaked, f"{program} leaked storage blocks: {leaked}"
 
 
 def test_resume_skips_completed_run(spark, graph, tmp_path):
