@@ -23,6 +23,10 @@ Scale notes:
   path the frontier is broadcast to dst-partitioned edges and the
   min-combine is partition-local — zero message shuffle; ``shuffle`` is
   the 10^12-scale path.
+- high-diameter graphs take ``connected_components_alternating``
+  (O(log n) rounds), which runs on ``Pregel`` too, with the edge set
+  as its state, so its durable checkpoints and resume are ``Pregel``'s
+  (``superstep=NNNNN/`` parquet plus a manifest).
 """
 
 from __future__ import annotations
@@ -67,6 +71,35 @@ def _cc_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
     return _cc_update(state, mins)
 
 
+def _min_nbr(sym: DataFrame) -> DataFrame:
+    return sym.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
+
+
+def _star_step(cur: DataFrame, num_partitions: int | None) -> DataFrame:
+    """One alternating round over the symmetric edge set: large-star, then
+    small-star."""
+    # large-star: (v, m(u)) for v in N(u), v > u
+    m = _min_nbr(cur)
+    large = (
+        cur.join(m, "src")
+        .where(F.col("dst") > F.col("src"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+    )
+    sym1 = symmetrize(large)
+    # small-star: (v, m(u)) for v in N(u), v < u; plus (u, m(u))
+    m2 = _min_nbr(sym1)
+    small = (
+        sym1.join(m2, "src")
+        .where(F.col("dst") < F.col("src"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        .unionAll(m2.select(F.col("src"), F.col("m").alias("dst")))
+    )
+    nxt = symmetrize(small)
+    if num_partitions:
+        nxt = nxt.repartition(num_partitions, "src")
+    return nxt
+
+
 def connected_components_alternating(
     spark: SparkSession,
     vertices: DataFrame,
@@ -96,139 +129,47 @@ def connected_components_alternating(
     exact. Each round is two groupBy/join passes over the current edge
     set; the set only shrinks (toward one edge per non-root vertex).
 
-    ``checkpoint_dir``/``run_id``/``reliable_interval``/``resume`` mirror
-    the Pregel driver's durable-checkpoint contract: the CURRENT EDGE SET
-    (this algorithm's whole loop state) is written to parquet with a
-    ``_MANIFEST.json`` every ``reliable_interval`` rounds, and
-    ``resume=True`` restarts from the latest complete manifest — so
-    ``algorithm="auto"``'s fallback phase is resumable like the hash-min
-    probe phase.
+    Runs on :class:`Pregel` with the CURRENT EDGE SET as the state (one
+    superstep = one large-star + small-star round); it halts when the
+    edge-set signature (row count, Σ hash), carried as metrics, repeats.
+    ``checkpoint_dir``/``run_id``/``reliable_interval``/``resume`` are
+    ``Pregel``'s durable-checkpoint contract (``superstep=NNNNN/`` parquet
+    plus a manifest), so ``algorithm="auto"``'s fallback phase
+    is resumable like the hash-min probe phase. After a mid-run resume
+    the first signature has nothing to compare with, which may cost one
+    extra confirming round; the labels are unchanged.
     """
-    import json
-    import os
-
     mapping = None
     verts, e = vertices, edges
     if encode:
         mapping, verts, e = prepare_encoding(spark, vertices, edges, num_partitions)
 
-    ckpt_root = os.path.join(checkpoint_dir, run_id) if checkpoint_dir else None
+    init = symmetrize(e)
+    if num_partitions:
+        init = init.repartition(num_partitions, "src")
 
-    def _round_path(r: int) -> str:
-        assert ckpt_root
-        return os.path.join(ckpt_root, f"round={r:05d}")
+    last: dict[str, tuple] = {}
 
-    def _latest_round() -> int | None:
-        if not ckpt_root or not os.path.isdir(ckpt_root):
-            return None
-        best = None
-        for name in os.listdir(ckpt_root):
-            if name.startswith("round=") and os.path.exists(
-                os.path.join(ckpt_root, name, "_MANIFEST.json")
-            ):
-                r = int(name.split("=")[1])
-                best = r if best is None or r > best else best
-        return best
+    def halt(m: dict, s: int) -> bool:
+        sig = (m["edge_pairs"], m["edge_hash"])
+        repeated = last.get("sig") == sig
+        last["sig"] = sig
+        return repeated
 
-    def _sym(pairs: DataFrame) -> DataFrame:
-        p = pairs.where(F.col("src") != F.col("dst"))
-        return p.unionAll(
-            p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-
-    def _min_nbr(sym: DataFrame) -> DataFrame:
-        return sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-
-    prev_sig = None
-    rounds = 0
-    converged = False
-    metrics_hist: list[dict] = []
-    start_round = 1
-
-    resumed = None
-    if resume and ckpt_root:
-        latest = _latest_round()
-        if latest is not None:
-            with open(os.path.join(_round_path(latest), "_MANIFEST.json")) as f:
-                manifest = json.load(f)
-            resumed = spark.read.parquet(_round_path(latest))
-            prev_sig = tuple(manifest["sig"]) if manifest.get("sig") else None
-            metrics_hist = manifest.get("metrics_history", [])
-            converged = bool(manifest.get("converged"))
-            rounds = latest
-            start_round = latest + 1
-
-    if resumed is not None:
-        cur = resumed.transform(local_checkpoint_stats_reset)
-    else:
-        cur = _sym(e.select("src", "dst"))
-        if num_partitions:
-            cur = cur.repartition(num_partitions, "src")
-        cur = cur.transform(local_checkpoint_stats_reset)
-    cached: list[DataFrame] = [cur]
-    if converged:
-        start_round = max_rounds + 1  # resumed at a converged manifest: no work left
-    for rounds in range(start_round, max_rounds + 1):
-        # large-star: (v, m(u)) for v in N(u), v > u
-        m = _min_nbr(cur)
-        large = (
-            cur.join(m, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        sym1 = _sym(large)
-        # small-star: (v, m(u)) for v in N(u), v < u; plus (u, m(u))
-        m2 = _min_nbr(sym1)
-        small = (
-            sym1.join(m2, "src")
-            .where(F.col("dst") < F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionAll(m2.select(F.col("src"), F.col("m").alias("dst")))
-        )
-        cur = _sym(small)
-        if num_partitions:
-            cur = cur.repartition(num_partitions, "src")
-        cur = cur.transform(local_checkpoint_stats_reset)
-        cached.append(cur)
-        # keep only the last 2 checkpointed edge sets in block-manager
-        # storage (mirrors Pregel.run's cached-list cleanup)
-        while len(cached) > 2:
-            free_local_checkpoint(cached.pop(0))
-        sig_row = cur.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash("src", "dst").cast("long")).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        metrics_hist.append({"superstep": rounds - 1, "edge_pairs": sig[0]})
-        converged = sig == prev_sig
-        prev_sig = sig
-        if ckpt_root and (
-            rounds % reliable_interval == 0 or converged or rounds == max_rounds
-        ):
-            path = _round_path(rounds)
-            cur.write.mode("overwrite").parquet(path)
-            part_counts = {
-                str(r["pid"]): r["cnt"]
-                for r in cur.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            manifest = {
-                "run_id": run_id,
-                "round": rounds,
-                "sig": list(sig),
-                "converged": converged,
-                "partition_edge_counts": part_counts,
-                "metrics_history": metrics_hist,
-            }
-            with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
-                json.dump(manifest, f, default=str)
-        if converged:
-            break
-
-    if not converged:
+    res = Pregel(
+        spark,
+        step=lambda cur, s: _star_step(cur, num_partitions),
+        metrics_exprs={
+            "edge_pairs": F.count(F.lit(1)),
+            "edge_hash": F.sum(F.hash("src", "dst").cast("long")),
+        },
+        halt=halt,
+        checkpoint_dir=checkpoint_dir,
+        run_id=run_id,
+        reliable_interval=reliable_interval,
+        max_supersteps=max_rounds,
+    ).run(init, resume=resume)
+    if not res.halted:
         import warnings
 
         warnings.warn(
@@ -238,13 +179,15 @@ def connected_components_alternating(
             RuntimeWarning,
             stacklevel=2,
         )
+    cur = res.state
     nbr_min = cur.groupBy(F.col("src").alias("id")).agg(F.min("dst").alias("mn"))
-    state = verts.join(nbr_min, "id", "left").select(
+    labels = verts.join(nbr_min, "id", "left").select(
         "id", F.least("id", F.coalesce("mn", "id")).alias("label")
     )
-    res = PregelResult(state, rounds, metrics_hist, converged, run_id)
     if mapping is not None:
-        res.state = decode_state(res.state, mapping, ("id", "label"))
+        labels = decode_state(labels, mapping, ("id", "label"))
+    res.state = labels.transform(local_checkpoint_stats_reset)
+    free_local_checkpoint(cur)
     return res
 
 

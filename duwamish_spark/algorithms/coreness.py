@@ -16,27 +16,48 @@ have value >= h). Estimates are monotone non-increasing, always upper
 bounds, and converge exactly to the core numbers (typically in a few
 dozen rounds even on billion-edge graphs — the paper's headline result).
 
-Engine formulation: one round = join estimates to the symmetrized
-simple adjacency (E-bounded), then a per-vertex h-index as a window +
-aggregation: rank each neighborhood's values descending and take
-``max(min(rank, value))`` — all integers, whole-stage codegen, no UDFs.
-The (Σc, changed-count) signature riding the materializing job detects
-the fixpoint. A fixed-round prefix is exactly replayable in SQL (driver
-gate ``coreness_round3``); convergence is brute-force-tested in pytest.
+Engine formulation: one round = one ``pregel.Pregel`` superstep. Every
+vertex sends its estimate through ``pregel.MessageExchange`` (pinned to
+``strategy="shuffle"``) over the symmetrized simple adjacency, placed by
+``src`` once (E-bounded); the receiver's h-index is a window +
+aggregation, not an algebraic combine: rank each neighborhood's values
+descending and take ``max(min(rank, value))`` — all integers,
+whole-stage codegen, no UDFs. Estimates never increase, so the run halts
+on the first round that changes no estimate (Σ ``_changed`` = 0). A
+fixed-round prefix is exactly replayable in SQL (driver gate
+``coreness_round3``); convergence is brute-force-tested in pytest.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duwamish_spark.graph import canonical_edges, partition_by, require_columns
+from duwamish_spark.graph import canonical_edges, require_columns
 from duwamish_spark.pregel import (
+    MessageExchange,
+    Pregel,
     PregelResult,
     free_local_checkpoint,
     local_checkpoint_stats_reset,
 )
+
+
+def _coreness_step(state: DataFrame, exchange: MessageExchange) -> DataFrame:
+    vals = exchange.send(state, F.col("id").alias("v"), F.col("c").alias("cv"))
+    w = Window.partitionBy("dst").orderBy(F.col("cv").desc(), F.col("v").asc())
+    h = (
+        vals.withColumn("rn", F.row_number().over(w))
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.max(F.least(F.col("rn"), F.col("cv"))).alias("h"))
+    )
+    new_c = F.coalesce("h", "c")
+    return state.join(h, "id", "left").select(
+        "id",
+        new_c.alias("c"),
+        (new_c != F.col("c")).cast("int").alias("_changed"),
+    )
 
 
 def coreness(
@@ -60,57 +81,31 @@ def coreness(
     require_columns(edges, ("src", "dst"), "edges")
 
     c = canonical_edges(edges)
-    adj = c.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
-        c.select(F.col("dst").alias("u"), F.col("src").alias("v"))
+    exchange = MessageExchange(
+        c.unionAll(c.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        strategy="shuffle",
+        num_partitions=num_partitions,
+        partitioner=partitioner,
     )
-    if num_partitions:
-        adj = partition_by(adj, num_partitions, "u", partitioner)
-    adj = adj.transform(local_checkpoint_stats_reset)
-
-    est = (
-        adj.groupBy(F.col("u").alias("id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .transform(local_checkpoint_stats_reset)
+    # the estimates start at the degree; vertices without simple edges
+    # neither send nor receive and join back as 0 below
+    init = exchange.edges.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).cast("long").alias("c"), F.lit(1).alias("_changed")
     )
-
-    metrics_hist: list[dict] = []
-    halted = False
-    rounds = 0
-    sig = None
-    w = Window.partitionBy("nid").orderBy(F.col("cv").desc(), F.col("v").asc())
-    for t in range(1, max_rounds + 1):
-        vals = adj.join(est, adj["v"] == est["id"]).select(
-            adj["u"].alias("nid"), "v", F.col("c").alias("cv")
-        )
-        obs = Observation()
-        nxt = (
-            vals.withColumn("rn", F.row_number().over(w))
-            .groupBy(F.col("nid").alias("id"))
-            .agg(F.max(F.least(F.col("rn"), F.col("cv"))).alias("c"))
-            .observe(obs, F.sum("c").alias("csum"))
-            .transform(local_checkpoint_stats_reset)
-        )
-        csum = int(obs.get["csum"])
-        rounds = t
-        metrics_hist.append({"superstep": t, "coreness_sum": csum})
-        free_local_checkpoint(est)
-        est = nxt
-        if sig == csum:
-            # monotone non-increasing + unchanged sum == fixpoint
-            halted = True
-            break
-        sig = csum
-    out = (
+    res = Pregel(
+        spark,
+        step=lambda st, s: _coreness_step(st, exchange),
+        metrics_exprs={"changed": F.sum("_changed"), "coreness_sum": F.sum("c")},
+        halt=lambda m, s: (m["changed"] or 0) == 0,
+        run_id="coreness",
+        max_supersteps=max_rounds,
+        exchanges=(exchange,),
+    ).run(init)
+    est = res.state
+    res.state = (
         vertices.join(est, "id", "left")
         .select("id", F.coalesce("c", F.lit(0)).cast("long").alias("coreness"))
         .transform(local_checkpoint_stats_reset)
     )
     free_local_checkpoint(est)
-    free_local_checkpoint(adj)
-    return PregelResult(
-        state=out,
-        supersteps=rounds,
-        metrics=metrics_hist,
-        halted=halted,
-        run_id="coreness",
-    )
+    return res

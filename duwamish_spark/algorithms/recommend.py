@@ -34,6 +34,14 @@ state, but a rating round's messages depend on what the rating vertex
 standard re-expression of message-carried dataflow as state columns. The
 ``repeated double featureVector`` maps to ``ArrayType(DoubleType)``
 (examples.proto:21-26) updated positionally with ``F.transform``.
+
+Physical plan (``strategy="shuffle"``): the feature→rating and
+rating→feature edges are two ``pregel.MessageExchange`` objects, ``f2r``
+and ``r2f``, pinned to ``shuffle``; each is placed by ``src`` and
+persisted once and released when the run ends. A feature round sends
+through ``f2r`` (the user/movie split rides in the sent values), a
+rating round through ``r2f`` (the edge's tag picks the factor); both
+combine by ``dst``.
 """
 
 from __future__ import annotations
@@ -43,12 +51,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from duwamish_spark.pregel import Pregel, PregelResult, free_local_checkpoint
+from duwamish_spark.pregel import (
+    MessageExchange,
+    Pregel,
+    PregelResult,
+    free_local_checkpoint,
+)
 
 
-def _feature_round(state: DataFrame, e_f2r: DataFrame, rf: int, cf: int, cap: float) -> DataFrame:
+def _feature_round(
+    state: DataFrame, f2r: MessageExchange, rf: int, cf: int, cap: float
+) -> DataFrame:
     """Even superstep: apply gradient sums at index rf, deliver component cf
     to rating vertices (stored as uval/mval)."""
     is_feat = F.col("kind") != "rating"
@@ -73,17 +87,19 @@ def _feature_round(state: DataFrame, e_f2r: DataFrame, rf: int, cf: int, cap: fl
         F.lit(None).cast("double").alias("_mse"),
         F.lit(0).alias("_msgs"),
     )
-    feats = updated.where(F.col("kind") != "rating").select(
+    feats = updated.where(is_feat).select(
         "id", "kind", F.element_at("fvec", cf + 1).alias("val")
     )
-    msgs = feats.hint("shuffle_hash").join(e_f2r, feats["id"] == e_f2r["src"]).select(
-        F.col("dst").alias("rid"), "kind", "val"
+    msgs = f2r.send(
+        feats,
+        F.when(F.col("kind") == "user", F.col("val")).alias("u"),
+        F.when(F.col("kind") == "movie", F.col("val")).alias("m"),
+        F.lit(1).alias("n"),
     )
-    recv = msgs.groupBy("rid").agg(
-        F.max(F.when(F.col("kind") == "user", F.col("val"))).alias("new_uval"),
-        F.max(F.when(F.col("kind") == "movie", F.col("val"))).alias("new_mval"),
-        F.count(F.lit(1)).alias("mcnt"),
-    ).withColumnRenamed("rid", "id")
+    recv = f2r.combine(
+        msgs,
+        [("new_uval", "u", "max"), ("new_mval", "m", "max"), ("mcnt", "n", "count")],
+    ).withColumnRenamed("dst", "id")
     return updated.join(recv.hint("shuffle_hash"), "id", "left").select(
         "id",
         "kind",
@@ -99,7 +115,7 @@ def _feature_round(state: DataFrame, e_f2r: DataFrame, rf: int, cf: int, cap: fl
 
 
 def _rating_round(
-    state: DataFrame, e_r2f: DataFrame, fold_residue: bool, learning_rate: float
+    state: DataFrame, r2f: MessageExchange, fold_residue: bool, learning_rate: float
 ) -> DataFrame:
     """Odd superstep: rating vertices compute prediction/error, send updates
     back along tagged edges (stored as gsum on feature vertices)."""
@@ -119,20 +135,17 @@ def _rating_round(
         F.when(is_rating, err).alias("_err"),
         F.when(is_rating, err * err).alias("_mse"),
     )
-    senders = computed.where(is_rating).select(
-        "id", "_err", "uval", "mval"
-    )
-    msgs = senders.hint("shuffle_hash").join(
-        e_r2f, senders["id"] == e_r2f["src"]
-    ).select(
-        F.col("dst").alias("fid"),
+    senders = computed.where(is_rating).select("id", "_err", "uval", "mval")
+    msgs = r2f.send(
+        senders,
         F.when(F.col("tag") == "user", F.col("_err") * F.col("mval"))
         .otherwise(F.col("_err") * F.col("uval"))
         .alias("upd"),
+        F.lit(1).alias("n"),
     )
-    sums = msgs.groupBy("fid").agg(
-        F.sum("upd").alias("new_gsum"), F.count(F.lit(1)).alias("mcnt")
-    ).withColumnRenamed("fid", "id")
+    sums = r2f.combine(
+        msgs, [("new_gsum", "upd", "sum"), ("mcnt", "n", "count")]
+    ).withColumnRenamed("dst", "id")
     return computed.drop("_err").join(sums.hint("shuffle_hash"), "id", "left").select(
         "id",
         "kind",
@@ -478,13 +491,15 @@ def recommendations(
         )
     if strategy != "shuffle":
         raise ValueError(f"unknown recommendations strategy {strategy!r}")
-    e_f2r = (
+    f2r = MessageExchange(
         ratings.select(F.col("user_id").alias("src"), F.col("rating_id").alias("dst"))
         .unionAll(
             ratings.select(F.col("movie_id").alias("src"), F.col("rating_id").alias("dst"))
-        )
+        ),
+        strategy="shuffle",
+        num_partitions=num_partitions,
     )
-    e_r2f = (
+    r2f = MessageExchange(
         ratings.select(
             F.col("rating_id").alias("src"),
             F.col("user_id").alias("dst"),
@@ -496,14 +511,10 @@ def recommendations(
                 F.col("movie_id").alias("dst"),
                 F.lit("movie").alias("tag"),
             )
-        )
+        ),
+        strategy="shuffle",
+        num_partitions=num_partitions,
     )
-    if num_partitions:
-        e_f2r = e_f2r.repartition(num_partitions, "src")
-        e_r2f = e_r2f.repartition(num_partitions, "src")
-    e_f2r = e_f2r.persist(StorageLevel.MEMORY_AND_DISK)
-    e_r2f = e_r2f.persist(StorageLevel.MEMORY_AND_DISK)
-    e_f2r.count(), e_r2f.count()
 
     init_fvec = F.array(*[F.lit(1.0) for _ in range(n_features)])
     users = ratings.select(F.col("user_id").alias("id")).distinct().select(
@@ -544,9 +555,9 @@ def recommendations(
             rf = cf
             if current_round % runs_per_feature == 0 and current_round != 0:
                 rf -= 1  # fold the finished feature (Recommendations.java:60-62)
-            return _feature_round(state, e_f2r, rf, cf, cap)
+            return _feature_round(state, f2r, rf, cf, cap)
         fold = (current_round + 1) % runs_per_feature == 0
-        return _rating_round(state, e_r2f, fold, learning_rate)
+        return _rating_round(state, r2f, fold, learning_rate)
 
     metrics = {
         "mse": F.sum("_mse"),  # reference: MSE DoubleSumAccumulator
@@ -566,11 +577,8 @@ def recommendations(
             else n_features * runs_per_feature * 2
         ),
         halt_interval=halt_interval,
+        exchanges=(f2r, r2f),
     )
-    try:
-        res = runner.run(init, resume=resume)
-        res.state = res.state.select("id", "kind", "fvec", "rating", "residue")
-        return res
-    finally:
-        e_f2r.unpersist()
-        e_r2f.unpersist()
+    res = runner.run(init, resume=resume)
+    res.state = res.state.select("id", "kind", "fvec", "rating", "residue")
+    return res

@@ -24,11 +24,13 @@ array ever materializes (a 10^8-degree hub contributes partial sums,
 not a collect_list). md5/u32 is the repo's cross-engine hash family, so
 a DuckDB chained CTE replays every signature bit-for-bit.
 
-Scale shape: one round = one E-bounded join (state → symmetrized
-adjacency) + one map-side-combinable groupBy sum + a V-row update join
-— exactly the engine's Pregel cost model; rounds are fixed (WL depth is
-a semantic parameter, not a convergence loop), each round's state is
-checkpointed with plan-stats reset like every iterative core.
+Scale shape: one round = one ``pregel.Pregel`` superstep sending
+through ``pregel.MessageExchange`` pinned to ``strategy="shuffle"`` over
+the symmetrized adjacency (placed by ``src`` once): an E-bounded send
+join, a map-side-combinable ``sum`` combine by ``dst`` and a V-row update
+join. Rounds are fixed (WL depth is a semantic parameter, not a
+convergence loop: ``max_supersteps=rounds``, the halt rule never fires);
+``Pregel``'s local checkpoint truncates each round's lineage.
 
 Reference scope: duwamish has no WL operator; this extends the engine's
 per-vertex analytics family (coreness/clustering/centralities) with the
@@ -37,19 +39,36 @@ structural-equivalence signal.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duwamish_spark.graph import require_columns, symmetrize
-from duwamish_spark.pregel import (
-    PregelResult,
-    free_local_checkpoint,
-    local_checkpoint_stats_reset,
-)
+from duwamish_spark.pregel import MessageExchange, Pregel, PregelResult
 
 
 def _u32(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def _wl_step(state: DataFrame, exchange: MessageExchange, t: int) -> DataFrame:
+    msgs = exchange.send(
+        state,
+        _u32(F.concat(F.lit("wlh:"), F.col("wl_sig").cast("string"))).alias("h"),
+    )
+    sums = exchange.combine(msgs, [("s", "h", "sum")]).withColumnRenamed(
+        "dst", "id"
+    )
+    return state.join(sums, "id", "left").select(
+        "id",
+        _u32(
+            F.concat(
+                F.lit(f"wl{t}:"),
+                F.col("wl_sig").cast("string"),
+                F.lit(":"),
+                F.coalesce("s", F.lit(0)).cast("string"),
+            )
+        ).alias("wl_sig"),
+    )
 
 
 def wl_signatures(
@@ -73,55 +92,24 @@ def wl_signatures(
     require_columns(vertices, ("id",), "vertices")
     require_columns(edges, ("src", "dst"), "edges")
 
-    adj = symmetrize(edges).transform(local_checkpoint_stats_reset)
-    deg = adj.groupBy(F.col("src").alias("id")).agg(
+    exchange = MessageExchange(symmetrize(edges), strategy="shuffle")
+    deg = exchange.edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("d")
     )
-    state = (
-        vertices.join(deg, "id", "left")
-        .select(
-            "id",
-            _u32(
-                F.concat(F.lit("wl0:"), F.coalesce("d", F.lit(0)).cast("string"))
-            ).alias("wl_sig"),
-        )
-        .transform(local_checkpoint_stats_reset)
+    init = vertices.join(deg, "id", "left").select(
+        "id",
+        _u32(
+            F.concat(F.lit("wl0:"), F.coalesce("d", F.lit(0)).cast("string"))
+        ).alias("wl_sig"),
     )
-
-    metrics_hist: list[dict] = []
-    for t in range(1, rounds + 1):
-        nbr = state.join(adj, state["id"] == adj["src"]).select(
-            adj["dst"].alias("id"),
-            _u32(F.concat(F.lit("wlh:"), F.col("wl_sig").cast("string"))).alias("h"),
-        )
-        sums = nbr.groupBy("id").agg(F.sum("h").alias("s"))
-        obs = Observation()
-        nxt = (
-            state.join(sums, "id", "left")
-            .select(
-                "id",
-                _u32(
-                    F.concat(
-                        F.lit(f"wl{t}:"),
-                        F.col("wl_sig").cast("string"),
-                        F.lit(":"),
-                        F.coalesce("s", F.lit(0)).cast("string"),
-                    )
-                ).alias("wl_sig"),
-            )
-            # the colors metric rides the checkpoint-materializing job
-            # (the O10 discipline — no separate aggregation job)
-            .observe(obs, F.approx_count_distinct("wl_sig").alias("c"))
-            .transform(local_checkpoint_stats_reset)
-        )
-        metrics_hist.append({"superstep": t, "colors": int(obs.get["c"])})
-        free_local_checkpoint(state)
-        state = nxt
-    free_local_checkpoint(adj)
-    return PregelResult(
-        state=state,
-        supersteps=rounds,
-        metrics=metrics_hist,
-        halted=True,
+    res = Pregel(
+        spark,
+        step=lambda st, s: _wl_step(st, exchange, s + 1),
+        metrics_exprs={"colors": F.approx_count_distinct("wl_sig")},
+        halt=lambda m, s: False,
         run_id="wl",
-    )
+        max_supersteps=rounds,
+        exchanges=(exchange,),
+    ).run(init)
+    res.halted = True  # a fixed-depth refinement is complete by definition
+    return res

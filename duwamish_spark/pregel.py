@@ -211,11 +211,13 @@ class MessageExchange:
     """The physical message exchange of one run, chosen once.
 
     - ``shuffle`` — the 10^12-scale path. Edges persisted hash-partitioned
-      on ``src``; per superstep the senders (V rows, the hash-build side)
-      exchange to the edge partitioning, a SHUFFLE_HASH join streams the
-      edges with no re-exchange, and the combine is the one E-bounded
-      shuffle by ``dst`` (map-side partial; ``salt`` splits hot
-      destinations, ``combine="raw"`` exchanges raw messages first).
+      on ``src`` (into ``num_partitions``, else
+      ``spark.sql.shuffle.partitions``); per superstep the senders (V
+      rows, the hash-build side) exchange to the edge partitioning, a
+      SHUFFLE_HASH join streams the edges with no re-exchange, and the
+      combine is the one E-bounded shuffle by ``dst`` (map-side partial;
+      ``salt`` splits hot destinations, ``combine="raw"`` exchanges raw
+      messages first).
     - ``broadcast`` — edges persisted hash-partitioned on ``dst``; the
       senders are broadcast each superstep, so the combine is
       PARTITION-LOCAL (partial + final hash aggregate in one codegen
@@ -242,19 +244,20 @@ class MessageExchange:
         self.broadcast = strategy == "broadcast" or (
             strategy == "auto" and n_verts <= BROADCAST_MAX_VERTICES
         )
-        if num_partitions:
+        p = num_partitions
+        if not (p or self.broadcast):
+            # the send join's hash exchange of the senders lands on
+            # shuffle.partitions; edges placed there are never re-shuffled
+            p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        if p:
             edges = partition_by(
-                edges, num_partitions, "dst" if self.broadcast else "src",
-                partitioner,
+                edges, p, "dst" if self.broadcast else "src", partitioner
             )
         self.edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
         self.edges.count()  # materialize once; reused every superstep
         if self.broadcast:
             salt = 0
         elif salt == "auto":
-            p = num_partitions or int(
-                edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
             salt = suggest_salt(self.edges, p)
         self.salt = salt
         self.pre_shuffle = not self.broadcast and combine == "raw"
@@ -308,8 +311,10 @@ class Pregel:
     ----------
     step:
         ``(state_df, superstep) -> new_state_df``. The returned frame must
-        keep the ``id`` column and all state columns; transient
-        metric-support columns must be prefixed ``_`` (dropped on finalize).
+        keep all state columns; transient metric-support columns must be
+        prefixed ``_`` (dropped on finalize). The state is usually one row
+        per vertex keyed by ``id``, but need not be: alternating-star CC's
+        rows are the current edge set ``(src, dst)``.
     metrics_exprs:
         named aggregate Columns evaluated over the new state each superstep
         — the accumulator map (reference: Duwamish.java:63-67,136-138).
@@ -447,7 +452,7 @@ class Pregel:
             # AQE's per-stage re-planning is pure latency for this fixed,
             # well-understood plan shape — disable it for the loop only.
             conf.set("spark.sql.adaptive.enabled", "false")
-            s = start
+            s = start - 1  # supersteps run = s + 1, also when none runs
             t0 = time.monotonic()
             for s in range(start, self.max_supersteps):
                 new_state = self.step(state, s)

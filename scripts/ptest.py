@@ -25,33 +25,35 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-# rough serial seconds per file (measured round 3/4) — only the ORDER
-# matters (longest-first greedy bin packing), not accuracy
+# serial seconds per file from one tier-1 `--durations=0` run on a 4-core
+# host — only the ORDER matters (longest-first greedy bin packing), not
+# accuracy
 DURATIONS = {
-    "test_entry_contract.py": 600,
-    "test_typeaudit.py": 300,
-    "test_recommend.py": 300,
-    "test_structure.py": 240,
-    "test_pregel.py": 180,
-    "test_pagerank.py": 170,
-    "test_components.py": 150,
-    "test_functions.py": 140,
-    "test_linkgraph_ops.py": 130,
-    "test_betweenness.py": 120,
-    "test_streaming.py": 110,
-    "test_multimodal.py": 100,
-    "test_labelprop.py": 90,
-    "test_triangles.py": 90,
-    "test_sssp.py": 80,
-    "test_densest.py": 70,
-    "test_msf.py": 70,
-    "test_sampling.py": 70,
-    "test_mis.py": 60,
-    "test_layering.py": 60,
-    "test_parse.py": 50,
-    "test_parse_property.py": 50,
-    "test_sources.py": 40,
-    "test_package.py": 30,
+    "test_entry_contract.py": 615,
+    "test_components.py": 319,
+    "test_pagerank.py": 167,
+    "test_functions.py": 156,
+    "test_linkgraph_ops.py": 145,
+    "test_streaming.py": 138,
+    "test_bowtie.py": 97,
+    "test_structure.py": 90,
+    "test_pregel.py": 86,
+    "test_labelprop.py": 83,
+    "test_louvain.py": 79,
+    "test_betweenness.py": 68,
+    "test_recommend.py": 31,
+    "test_msf.py": 21,
+    "test_mis.py": 17,
+    "test_sampling.py": 14,
+    "test_layering.py": 14,
+    "test_densest.py": 13,
+    "test_sssp.py": 9,
+    "test_triangles.py": 9,
+    "test_multimodal.py": 6,
+    "test_sources.py": 3,
+    "test_package.py": 1,
+    "test_parse.py": 1,
+    "test_parse_property.py": 1,
 }
 
 

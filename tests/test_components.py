@@ -166,12 +166,12 @@ def test_alternating_checkpoint_resume(spark, tmp_path):
     rounds = sorted(
         int(n.split("=")[1])
         for n in os.listdir(root)
-        if n.startswith("round=")
+        if n.startswith("superstep=")
     )
     assert len(rounds) >= 2
     # drop everything after round 1 to force a real mid-run resume
     for r in rounds[1:]:
-        shutil.rmtree(os.path.join(root, f"round={r:05d}"))
+        shutil.rmtree(os.path.join(root, f"superstep={r:05d}"))
     resumed = connected_components_alternating(
         spark, v, e, checkpoint_dir=ck, run_id="alt",
         reliable_interval=1, resume=True,

@@ -17,12 +17,16 @@ from pyspark.sql import functions as F
 from conftest import edges_df, vertices_df
 from duwamish_spark.algorithms import (
     connected_components,
+    connected_components_alternating,
+    coreness,
     pagerank,
     shortest_paths,
     topological_depth,
+    wl_signatures,
 )
-from duwamish_spark.pregel import free_local_checkpoint
-from oracle import rand_graph
+from duwamish_spark.algorithms.recommend import recommendations
+from duwamish_spark.pregel import MessageExchange, free_local_checkpoint
+from oracle import bipartite_ratings, rand_graph
 
 
 @pytest.fixture()
@@ -100,6 +104,42 @@ def test_durable_cadence_rounds_up_to_halt_boundary(spark, graph, tmp_path):
     assert written == ["superstep=00011", "superstep=00023", "superstep=00024"]
 
 
+def test_supersteps_counts_only_supersteps_run(spark, graph, tmp_path):
+    v, e = graph
+    none = pagerank(spark, v, e, tol=0.0, max_supersteps=0)
+    assert none.supersteps == 0 and none.metrics == []
+    # resuming at the final (non-halted) checkpoint runs nothing more
+    ck = str(tmp_path / "ck")
+    pagerank(spark, v, e, tol=0.0, max_supersteps=4,
+             checkpoint_dir=ck, run_id="r6", reliable_interval=2)
+    again = pagerank(spark, v, e, tol=0.0, max_supersteps=4,
+                     checkpoint_dir=ck, run_id="r6", reliable_interval=2,
+                     resume=True)
+    assert again.supersteps == 4 and not again.halted
+
+
+def test_shuffle_exchange_places_edges_once(spark, graph):
+    # the persisted edge table already sits hash-partitioned by src where
+    # the send join needs it: only the (V-row) senders are exchanged per
+    # superstep, never the E-row edge table
+    v, e = graph
+    x = MessageExchange(e, strategy="shuffle")
+    try:
+        sent = x.send(v, F.col("id").alias("m"))
+        conf = spark.conf
+        saved = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            plan = sent._jdf.queryExecution().executedPlan().toString()
+        finally:
+            conf.set("spark.sql.adaptive.enabled", saved)
+    finally:
+        x.edges.unpersist()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert not [ln for ln in exchanges if "(src" in ln and "ENSURE_REQUIREMENTS" in ln], plan
+    assert [ln for ln in exchanges if "(id" in ln and "ENSURE_REQUIREMENTS" in ln], plan
+
+
 def _storage_ids(spark):
     return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
@@ -120,6 +160,19 @@ _PROGRAMS = {
         spark, v, e.withColumn("weight", F.lit(1.0)), "0", max_supersteps=4
     ),
     "topo": lambda spark, v, e: topological_depth(spark, v, e, max_supersteps=4),
+    "wl": lambda spark, v, e: wl_signatures(spark, v, e, rounds=3),
+    "coreness": lambda spark, v, e: coreness(spark, v, e, max_rounds=4),
+    "cc-alternating": lambda spark, v, e: connected_components_alternating(
+        spark, v, e, max_rounds=4, encode=False
+    ),
+    "recommend-shuffle": lambda spark, v, e: recommendations(
+        spark,
+        spark.createDataFrame(
+            bipartite_ratings(m=3, u=6, maxr=5, seed=9),
+            "user_id string, movie_id string, rating_id string, rating double",
+        ),
+        n_features=2, runs_per_feature=2, strategy="shuffle",
+    ),
 }
 
 
